@@ -153,31 +153,37 @@ object ProfileJobs {
       SparkEntry.queries.get(name) match {
         case None => System.err.println(s"[profile-jobs] unknown: $name")
         case Some(fn) =>
-          try fn(spark, sfDir).count()   // warm-up (memoized builds etc.)
-          catch { case e: Throwable =>
-            System.err.println(
-              s"[profile-jobs] $name warmup FAILED, skipping: " +
-                e.getMessage)
-          }
-          Thread.sleep(300)
-          jobsSeen.clear(); jobOrder.clear(); stageToJob.clear()
-          taskCount.clear(); shuffleKb.clear()
-          // NO setJobDescription here: the description property would
-          // mask each job's own call site, which is the whole point
-          spark.sparkContext.addSparkListener(listener)
-          fn(spark, sfDir).count()
-          Thread.sleep(500)              // drain the async listener bus
-          spark.sparkContext.removeSparkListener(listener)
-          println(s"== $name: ${jobOrder.size} jobs ==")
-          println("idx\ttasks\tshuffle_kb\tdescription | call site")
-          jobOrder.toArray(Array.empty[Integer]).zipWithIndex.foreach {
-            case (jid, idx) =>
-              val rec = jobsSeen.get(jid.intValue())
-              val tk = Option(taskCount.get(jid.intValue()))
-                .map(_.get()).getOrElse(0)
-              val kb = Option(shuffleKb.get(jid.intValue()))
-                .map(_.get() / 1024).getOrElse(0L)
-              println(s"$idx\t$tk\t$kb\t${rec.desc}")
+          // warm-up (memoized builds etc.); a query that fails it is
+          // skipped, the Profile.main stance
+          val warmFailed =
+            try { fn(spark, sfDir).count(); false }
+            catch { case e: Throwable =>
+              System.err.println(
+                s"[profile-jobs] $name warmup FAILED, skipping: " +
+                  e.getMessage)
+              true
+            }
+          if (!warmFailed) {
+            Thread.sleep(300)
+            jobsSeen.clear(); jobOrder.clear(); stageToJob.clear()
+            taskCount.clear(); shuffleKb.clear()
+            // NO setJobDescription here: the description property would
+            // mask each job's own call site, which is the whole point
+            spark.sparkContext.addSparkListener(listener)
+            fn(spark, sfDir).count()
+            Thread.sleep(500)              // drain the async listener bus
+            spark.sparkContext.removeSparkListener(listener)
+            println(s"== $name: ${jobOrder.size} jobs ==")
+            println("idx\ttasks\tshuffle_kb\tdescription | call site")
+            jobOrder.toArray(Array.empty[Integer]).zipWithIndex.foreach {
+              case (jid, idx) =>
+                val rec = jobsSeen.get(jid.intValue())
+                val tk = Option(taskCount.get(jid.intValue()))
+                  .map(_.get()).getOrElse(0)
+                val kb = Option(shuffleKb.get(jid.intValue()))
+                  .map(_.get() / 1024).getOrElse(0L)
+                println(s"$idx\t$tk\t$kb\t${rec.desc}")
+            }
           }
       }
     }

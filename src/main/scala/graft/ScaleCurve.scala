@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.extensions.Kmeans.Assigner
+
 /** Scale-curve artifact generator: runs six scale-critical pipeline
   * shapes (MinHash/LSH near-dup, cross-doc span dedup, IVF-PQ ANN,
   * dictionary NER, synonymizer name lookup, connected components) on
@@ -1109,7 +1111,7 @@ object ScaleCurve {
         var dqSum = 0L
         val (secA, _) = timeIt(spark) {
           dqSum = graft.extensions.Kmeans.assign(vecs, "vec_id",
-              "embedding", model)
+              "embedding", Assigner.Exact(model))
             .agg(sum(col("dq"))).collect().head.getLong(0)
           dqSum
         }
@@ -1139,7 +1141,8 @@ object ScaleCurve {
         var twins = 0L
         val (secS, _) = timeIt(spark) {
           val r = graft.extensions.Kmeans.nearDupPairs(vecs, "vec_id",
-              "embedding", model, threshold = 0.99)
+              "embedding", Assigner.Exact(model),
+              threshold = 0.99)
             .agg(count(lit(1)).as("np"),
                  // a twin must also have id_a in the planted SOURCE
                  // range [0, 100) (vectorCorpus copies ids 0..99 to the
@@ -1161,18 +1164,20 @@ object ScaleCurve {
         // kmPts note)
         val (secAx, _) = timeIt(spark) {
           graft.extensions.Kmeans.assign(vecs, "vec_id", "embedding",
-              model)
+              Assigner.Exact(model))
             .agg(sum(col("dq"))).collect().head.getLong(0)
         }
         // routing structures are built ONCE (a pure function of the
         // model, the offline-artifact stance) so the timer measures the
         // per-vector assignment flops, symmetric with the exact column
         val nSup = math.max(2, math.sqrt(kCells.toDouble).toInt)
-        val routing = graft.extensions.Kmeans.routingFor(spark, model,
-          nSupers = nSup)
+        val routing = Assigner.Routed(
+          graft.extensions.Kmeans.framedRoutingFor(
+            graft.extensions.Kmeans.lastCentroidsFrame(spark, model),
+            "cluster", "cv", nSupers = nSup))
         val (secAr, _) = timeIt(spark) {
-          graft.extensions.Kmeans.routedAssign(vecs, "vec_id",
-              "embedding", routing)
+          graft.extensions.Kmeans.assign(vecs, "vec_id", "embedding",
+              routing)
             .agg(sum(col("dq"))).collect().head.getLong(0)
         }
         // the ROUTED prune pipeline's candidate generator
@@ -1184,7 +1189,7 @@ object ScaleCurve {
         var nPairsR = 0L
         var twinsR = 0L
         val (secSR, _) = timeIt(spark) {
-          val r = graft.extensions.Kmeans.nearDupPairsRouted(vecs,
+          val r = graft.extensions.Kmeans.nearDupPairs(vecs,
               "vec_id", "embedding", routing, threshold = 0.99)
             .agg(count(lit(1)).as("np"),
                  sum(when(col("id_b") - col("id_a") === n - 100 &&
@@ -1279,8 +1284,9 @@ object ScaleCurve {
         val nSup = 100
         var cents: DataFrame = null
         val (secT, _) = timeIt(spark) {
-          cents = graft.extensions.Kmeans.lloydFramed(vecs, "vec_id",
-            "embedding", k = k, rounds = 1, nSupers = nSup)
+          cents = graft.extensions.Kmeans.centroidsOf(
+            graft.extensions.Kmeans.lloydFramed(vecs, "vec_id",
+              "embedding", k = k, rounds = 1, nSupers = nSup))
           cents.count()
         }
         val routing0 = graft.extensions.Kmeans.framedRoutingFor(
@@ -1290,8 +1296,8 @@ object ScaleCurve {
         var dqSum = 0L
         val (secA, _) = timeIt(spark) {
           // agg over dq (a bare count would prune the argmin — §12)
-          dqSum = graft.extensions.Kmeans.framedAssign(vecs, "vec_id",
-              "embedding", routing)
+          dqSum = graft.extensions.Kmeans.assign(vecs, "vec_id",
+              "embedding", Assigner.Routed(routing))
             .agg(sum(col("dq"))).collect().head.getLong(0)
           dqSum
         }
@@ -1324,8 +1330,9 @@ object ScaleCurve {
         val nSup3 = 46  // ≈ k^(1/3) (supers AND mids)
         var cents: DataFrame = null
         val (secT, _) = timeIt(spark) {
-          cents = graft.extensions.Kmeans.lloydFramed(vecs, "vec_id",
-            "embedding", k = k, rounds = 1, nSupers = nSup2)
+          cents = graft.extensions.Kmeans.centroidsOf(
+            graft.extensions.Kmeans.lloydFramed(vecs, "vec_id",
+              "embedding", k = k, rounds = 1, nSupers = nSup2))
           cents.count()
         }
         // offline-artifact stance: snapshot the trained centroid frame
@@ -1338,8 +1345,8 @@ object ScaleCurve {
         val max2 = r2.members.groupBy("super").count()
           .agg(max("count")).collect().head.getLong(0)
         val (secA2, _) = timeIt(spark) {
-          graft.extensions.Kmeans.framedAssign(vecs, "vec_id",
-              "embedding", r2)
+          graft.extensions.Kmeans.assign(vecs, "vec_id",
+              "embedding", Assigner.Routed(r2))
             .agg(sum(col("dq"))).collect().head.getLong(0)
         }
         val r3raw = graft.extensions.Kmeans.framedRoutingFor3(
@@ -1350,8 +1357,8 @@ object ScaleCurve {
         val maxLeaf = r3.members.groupBy("super", "mid").count()
           .agg(max("count")).collect().head.getLong(0)
         val (secA3, _) = timeIt(spark) {
-          graft.extensions.Kmeans.framedAssign3(vecs, "vec_id",
-              "embedding", r3)
+          graft.extensions.Kmeans.assign(vecs, "vec_id",
+              "embedding", Assigner.Routed3(r3))
             .agg(sum(col("dq"))).collect().head.getLong(0)
         }
         // quality, measured two ways on the SAME assignment frames:
@@ -1363,11 +1370,13 @@ object ScaleCurve {
         // (b) planted-twin co-location — the SemDeDup-relevant
         // property (near-identical vectors must land in the SAME cell
         // for the within-cell search to see the pair), per level.
-        val a2 = graft.extensions.Kmeans.framedAssign(vecs, "vec_id",
-          "embedding", r2).select(col("id"), col("cluster").as("c"))
+        val a2 = graft.extensions.Kmeans.assign(vecs, "vec_id",
+          "embedding", Assigner.Routed(r2))
+          .select(col("id"), col("cluster").as("c"))
           .localCheckpoint(true)
-        val a3 = graft.extensions.Kmeans.framedAssign3(vecs, "vec_id",
-          "embedding", r3).select(col("id"), col("cluster").as("c"))
+        val a3 = graft.extensions.Kmeans.assign(vecs, "vec_id",
+          "embedding", Assigner.Routed3(r3))
+          .select(col("id"), col("cluster").as("c"))
           .localCheckpoint(true)
         val agree = a2.select(col("id"), col("c").as("c2"))
           .join(a3.select(col("id"), col("c").as("c3")), "id")
@@ -1395,15 +1404,15 @@ object ScaleCurve {
         // (near-exact) decision; the agreement lift over the nProbe=1
         // column is the measured recovery of the multi-probe path.
         val (secA3p2, _) = timeIt(spark) {
-          graft.extensions.Kmeans.framedAssign3(vecs, "vec_id",
-              "embedding", r3, nProbe = 2)
+          graft.extensions.Kmeans.assign(vecs, "vec_id",
+              "embedding", Assigner.Routed3(r3, nProbe = 2))
             .agg(sum(col("dq"))).collect().head.getLong(0)
         }
-        val a2p2 = graft.extensions.Kmeans.framedAssign(vecs, "vec_id",
-            "embedding", r2, nProbe = 2)
+        val a2p2 = graft.extensions.Kmeans.assign(vecs, "vec_id",
+            "embedding", Assigner.Routed(r2, nProbe = 2))
           .select(col("id"), col("cluster").as("c2"))
-        val a3p2 = graft.extensions.Kmeans.framedAssign3(vecs, "vec_id",
-            "embedding", r3, nProbe = 2)
+        val a3p2 = graft.extensions.Kmeans.assign(vecs, "vec_id",
+            "embedding", Assigner.Routed3(r3, nProbe = 2))
           .select(col("id"), col("cluster").as("c3"))
         val agreeP2row = a2p2.join(a3p2, "id")
           .agg(sum(when(col("c2") === col("c3"), 1L).otherwise(0L)),
@@ -1453,7 +1462,7 @@ object ScaleCurve {
         val model = graft.extensions.Kmeans.lloyd(vecs, "vec_id",
           "embedding", k = kCells, rounds = 1)
         val staged = graft.extensions.Kmeans.semStage(vecs, "vec_id",
-          "embedding", model)
+          "embedding", Assigner.Exact(model))
         val megaSize = staged.groupBy("cluster").count()
           .agg(max("count")).collect().head.getLong(0)
         var cappedPairs = 0L
@@ -2081,8 +2090,8 @@ object ScaleCurve {
        ^and fixed in r14: the wedge self-join fans each probe row out
        ^by its degree, so partitions AQE had sized to the probe frame's
        ^own bytes owned multi-GB wedge slices and the pair aggregates
-       ^spilled ~31 GB at 19M edges (ProfileLinkPredict has the stage
-       ^decomposition). The operator now scopes an expansion-sized
+       ^spilled ~31 GB at 19M edges. The operator now scopes an
+       ^expansion-sized
        ^partitioning (256 initial partitions + 8 MB advisory) around
        ^its own materialization above
        ^${graft.extensions.Graph.expansionEngageEdges / (1L << 20)}M
@@ -2162,20 +2171,20 @@ object ScaleCurve {
        ^The last two columns measure the large-k assignment trade on
        ^the SAME trained model: exact argmin is n·k·d flops (k grows
        ^with n here, so the wall grows superlinearly), the two-level
-       ^route (`Kmeans.routedAssign`, ~√k supers) is ~n·2√k·d — the
+       ^route (`Kmeans.Assigner.Routed`, ~√k supers) is ~n·2√k·d — the
        ^production path once k reaches the thousands, at the documented
        ^deterministic nProbe=1 approximation.
        ^
        ^### 12b. Frame-resident assignment at k = 10,000 (r16)
        ^
-       ^The literal-table routed path still COLLECTS all k centroids to
-       ^the driver and embeds them across √k plan branches — fine at
-       ^k in the thousands, a hard wall at the SemDeDup regime (k≈2M,
-       ^d=768 is tens of GB of driver state). Here the ceiling is gone:
+       ^A routed path that COLLECTS all k centroids to the driver and
+       ^embeds them across √k plan branches is fine at k in the
+       ^thousands and a hard wall at the SemDeDup regime (k≈2M, d=768
+       ^is tens of GB of driver state). Here the ceiling is gone:
        ^training is `Kmeans.lloydFramed` (centroids live in a
        ^(cluster, cv) frame between rounds; the driver holds only the
        ^100 super sums = 3,200 doubles, never the 320,000 the literal
-       ^path would), and assignment is `framedAssign` — map-side route
+       ^path would), and assignment is `Assigner.Routed` — map-side route
        ^over 100 super literals, then ONE 1:1 equi-join on `super`
        ^against the member table pre-grouped into a sorted per-super
        ^centroid ARRAY, with the argmin a map-side `NearestCentroidIn`
@@ -2184,8 +2193,8 @@ object ScaleCurve {
        ^candidate rows and re-grouped them — `min(struct)` can't
        ^hash-aggregate, so Spark sorted them in a SortAggregate;
        ^PlanShapeSpec pins the shipped no-aggregation shape). The
-       ^decision is bit-equal to the literal routed path
-       ^(ExtensionsSpec + the shared `kmeans_assign_framed` oracle).
+       ^`kmeans_assign_framed` oracle replays the decision
+       ^bit-for-bit.
        ^
        ^${table(kmFramedPts)}
        ^
@@ -2222,7 +2231,7 @@ object ScaleCurve {
        ^the same near-arbitrary argmin. (`kmeans_assign_framed3`'s
        ^oracle replays the full three-level decision bit-for-bit.)
        ^The nProbe=2 columns are the r17 #3 recovery knob
-       ^(`framedAssign3(..., nProbe)` — top-2 supers, top-2 mids per
+       ^(`Assigner.Routed3(routing, nProbe)` — top-2 supers, top-2 mids per
        ^probed super via the frame-resident NearestCentroidsIn kernel,
        ^≤4 leaf slots, map-side least): with BOTH hierarchies probing
        ^their second-nearest cells the two different partitions

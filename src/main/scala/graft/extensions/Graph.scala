@@ -1609,8 +1609,8 @@ object Graph {
     // 64 MB of THIS frame's bytes own multi-GB wedge slices downstream
     // — at 19M canonical edges the partial/final aggregates blew their
     // execution-memory share and spilled ~31 GB (the SCALECURVE §11
-    // link-prediction ×4.1 octave; ProfileLinkPredict has the stage
-    // decomposition). Fixed by [[withExpansionSizedShuffles]] around
+    // link-prediction ×4.1 octave). Fixed by
+    // [[withExpansionSizedShuffles]] around
     // the build (the localCheckpoint at the end materializes
     // everything inside the scope): 25.7 → 17.2 s at 6.4M vertices,
     // zero spill. Measured session-wide instead of scoped, the high

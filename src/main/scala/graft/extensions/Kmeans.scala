@@ -107,31 +107,25 @@ object Kmeans {
       .otherwise(b)
   }
 
-  /** Train `rounds` Lloyd iterations over `vecs(idCol, vecCol)` with
-    * k = the vectors of the k smallest ids as initial centroids.
+  /** Train up to `rounds` Lloyd iterations over `vecs(idCol, vecCol)`
+    * with k = the vectors of the k smallest ids as initial centroids.
     * Returns the full trajectory (see [[KmeansModel]]). Each round is
     * one Spark job: map-side assign + k·d-key update + bounded
     * (k·d + 1)-row collect.
+    *
+    * EXACT convergence early-stop: after round r ≥ 2, training stops
+    * once the quantized-inertia improvement `inertiaQ(r-1) − inertiaQ(r)`
+    * is ≤ `tolQ` (round r itself is kept — its inertia was measured, so
+    * the trajectory ends on the round that proved convergence). The
+    * criterion runs on the exact longs BOTH engines compute, so an
+    * independent SQL oracle replays the stop decision bit-for-bit — no
+    * epsilon, no float drift. `tolQ = 0` stops only on a fully-stalled
+    * (or quantization-noise negative) improvement; `tolQ < 0` (the
+    * default) never stops early. Each skipped round is one corpus
+    * assignment pass + one k·d shuffle that never runs.
     */
   def lloyd(vecs: DataFrame, idCol: String, vecCol: String,
-            k: Int, rounds: Int): KmeansModel =
-    lloyd(vecs, idCol, vecCol, k, rounds, tolQ = -1L)
-
-  /** [[lloyd]] with EXACT convergence early-stop: after round r ≥ 2,
-    * training stops once the quantized-inertia improvement
-    * `inertiaQ(r-1) − inertiaQ(r)` is ≤ `tolQ` (round r itself is kept —
-    * its inertia was measured, so the trajectory ends on the round that
-    * proved convergence). The criterion runs on the exact longs BOTH
-    * engines compute, so an independent SQL oracle replays the stop
-    * decision bit-for-bit — no epsilon, no float drift (the same
-    * engine-reproducibility stance as the rest of the trajectory).
-    * `tolQ = 0` stops only on a fully-stalled (or quantization-noise
-    * negative) improvement; `tolQ < 0` never stops early (the fixed-
-    * rounds overload). Saves whole Spark jobs: each skipped round is one
-    * corpus assignment pass + one k·d shuffle that never runs.
-    */
-  def lloyd(vecs: DataFrame, idCol: String, vecCol: String,
-            k: Int, rounds: Int, tolQ: Long): KmeansModel = {
+            k: Int, rounds: Int, tolQ: Long = -1L): KmeansModel = {
     require(k >= 1 && rounds >= 1, "k and rounds must be >= 1")
     val prepped = vecs
       .select(col(idCol).as("id"),
@@ -264,14 +258,14 @@ object Kmeans {
 
   /** FRAME-RESIDENT online update — [[incrementalUpdate]] without the
     * k·d driver state: `state` is the (cluster, pos, sq, n) fixed-
-    * point frame (a landed [[stateFrame]]/[[lloydFramedState]]
-    * artifact), the batch assigns under the state's centroids through
-    * the framed routing path, and the merge is one (cluster, pos)-
+    * point frame (a landed [[stateFrame]]/[[lloydFramed]] artifact),
+    * the batch assigns under the state's centroids through
+    * [[Assigner.Routed]], and the merge is one (cluster, pos)-
     * keyed left join — the driver never touches a centroid. With
     * `nSupers = 1` the batch assignment is the exact argmin and the
     * result equals [[incrementalUpdate]] bit-for-bit (ExtensionsSpec
     * pins it); with nSupers ≈ √k each batch pays the routed flop
-    * count — the same documented trade as [[routedAssign]].
+    * count — the same documented trade as [[Assigner.Routed]].
     *
     * Exactness: batch sums aggregate in DECIMAL(38,0); the merge adds
     * in decimal and downcasts with the loud overflow guard — the
@@ -292,16 +286,15 @@ object Kmeans {
     // builds, the same NearestCentroidIn fold (seed from member 0,
     // strict < walking ascending cluster ids), so the assignment is
     // bit-equal to the routed path (ExtensionsSpec pins framed == exact
-    // at nSupers = 1). The ragged-vector guard the route step used to
-    // provide (argminStruct raises) moves onto the fold result, which
-    // is null exactly on a dimension mismatch.
+    // at nSupers = 1). The ragged-vector guard sits on the fold
+    // result, which is null exactly on a dimension mismatch.
     // nSupers > 1 keeps the per-batch derivation: the routing must
     // track the EVOLVING centroids of state b−1 (freezing it would
     // change which super a vector probes, i.e. the documented
     // approximation contract), so it cannot be carried across batches.
     val assigned =
       if (nSupers == 1) {
-        val marr = centsOfState(state)
+        val marr = centroidsOf(state)
           .groupBy()
           .agg(array_sort(collect_list(struct(col("cluster"), col("cv"))))
             .as("marr"))
@@ -315,14 +308,13 @@ object Kmeans {
               "or fix them first")))
               .otherwise(best).getField("cluster").as("cluster"))
       } else {
-        val routing = framedRoutingFor(centsOfState(state), "cluster",
+        val routing = framedRoutingFor(centroidsOf(state), "cluster",
           "cv", nSupers)
         // the row id plays no part in the update aggregation — a
-        // constant satisfies the assign signature without inventing
+        // constant satisfies the decide signature without inventing
         // per-row ids
-        framedAssignWithV(
-          batch.select(lit(0L).as("_bid"), col(vecCol).as("_v")),
-          "_bid", "_v", routing)
+        decide(batch.select(lit(0L).as("_bid"), col(vecCol).as("_v")),
+          "_bid", "_v", Assigner.Routed(routing))
       }
     val bsums = assigned
       .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "x")))
@@ -409,102 +401,100 @@ object Kmeans {
       .toDF("round", "inertia_q")
   }
 
-  /** Final assignment under the trained model: (id, cluster, dq) per
-    * vector — one map-side pass, the plan a 100 TB cluster-assignment
-    * job wants (quantized distance keeps the output engine-exact). */
-  def assign(vecs: DataFrame, idCol: String, vecCol: String,
-             model: KmeansModel): DataFrame =
-    vecs.select(col(idCol).as("id"),
-        argminStruct(col(vecCol).cast("array<double>"), model.last)
-          .as("best"))
-      .select(col("id"), col("best.cluster").as("cluster"),
-              floor(col("best.d") * lit(Q)).cast("long").as("dq"))
-
-  /** Two-level ROUTED assignment — the large-k scale path. Exact
-    * assignment costs n·k·d flops; at the SemDeDup regime (k ∝ n for
-    * constant cell size) that grows quadratically. Routing groups the
-    * k centroids into `nSupers` super-cells (one Lloyd round over the
-    * k CENTROID rows — a k-row job, the index-build stance), then each
-    * vector pays one argmin over the supers plus one argmin within its
-    * routed super's members: ~n·(nSupers + k/nSupers)·d flops,
-    * minimized at nSupers ≈ √k. The IVF coarse-quantizer idea applied
-    * to the centroid table itself.
+  /** How a vector picks its centroid — the ONE assignment abstraction
+    * behind [[assign]], [[semStage]] and [[nearDupPairs]] (and the
+    * framed training/update paths).
     *
-    * Approximation contract, stated exactly: the result is the argmin
-    * within the routed super only — it differs from [[assign]]
-    * precisely when a vector's true nearest centroid lives in a
-    * non-routed super (the IVF nProbe=1 trade). Every step is
-    * deterministic and engine-reproducible: the super table derives
-    * from the model by the same fixed-point Lloyd arithmetic, routing
-    * and member argmins are the same sequential folds with the same
-    * (d, id) tie order, so an independent SQL engine replays the whole
-    * two-level decision bit-for-bit. Supers that end up with no member
-    * centroids are excluded from routing on both engines (a vector can
-    * only route where an answer exists).
+    *  - [[Assigner.Exact]]: the argmin over the model's final centroids
+    *    (n·k·d flops, the k·d table rides the plan as literals).
+    *  - [[Assigner.Routed]]: two-level frame-resident routing — the
+    *    large-k scale path. Each vector routes to its `nProbe` nearest
+    *    supers (√k literals) and argmins over the UNION of those supers'
+    *    member centroids, which stay a DataFrame (~n·(√k + nProbe·√k)·d
+    *    flops, no k·d driver or plan state).
+    *  - [[Assigner.Routed3]]: three-level routing — supers, then the
+    *    `nProbe` nearest mids per probed super, then the leaf members;
+    *    every joined array row is O(k^(1/3)·d).
     *
-    * @return (id, cluster, dq, super) per vector
+    * Approximation contract, stated exactly: a routed decision differs
+    * from Exact precisely when a vector's true nearest centroid lives
+    * outside every probed cell (the IVF nProbe trade). Every step is
+    * deterministic — sequential-fold distances, (d, cluster) argmin
+    * order with ties to the smaller id, fixed-point routing training —
+    * so an independent SQL engine replays the whole decision
+    * bit-for-bit. Probing every populated cell recovers the exact
+    * argmin.
     */
-  def routedAssign(vecs: DataFrame, idCol: String, vecCol: String,
-                   model: KmeansModel, nSupers: Int): DataFrame =
-    routedAssign(vecs, idCol, vecCol,
-      routingFor(vecs.sparkSession, model, nSupers))
-
-  /** Precomputed two-level routing structures: the populated super
-    * centroids and, per super, its member centroid table (both sorted
-    * by id — the NearestCentroid position-tie contract). A pure
-    * function of the model: build ONCE per model ([[routingFor]]),
-    * assign many — the convenience overload above rebuilds it per
-    * call, which repeated callers should avoid.
-    */
-  final case class RoutingTable(
-      routeCents: Array[(Int, Array[Double])],
-      members: Seq[(Int, Array[(Int, Array[Double])])])
-
-  /** Derive the routing structures: one Lloyd round over the k
-    * CENTROID rows (a k-row job — the index-build stance), membership
-    * under the updated supers, empty supers dropped. */
-  def routingFor(spark: org.apache.spark.sql.SparkSession,
-                 model: KmeansModel, nSupers: Int): RoutingTable = {
-    require(nSupers >= 1 && nSupers <= model.last.length,
-      "nSupers must be in [1, k]")
-    import spark.implicits._
-    // the k centroid rows as a tiny frame: (cluster id, centroid)
-    val centDf = model.last.toSeq
-      .map { case (cid, cv) => (cid, cv.toSeq) }
-      .toDF("cluster", "cv")
-    // one Lloyd round over the centroids; membership under the UPDATED
-    // super centroids — the same (train, assign) pair the corpus-level
-    // API exposes
-    val superModel = lloyd(centDf, "cluster", "cv",
-      k = nSupers, rounds = 1)
-    val membership: Map[Int, Int] =
-      assign(centDf, "cluster", "cv", superModel)
-        .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
-    val superCent = superModel.last.toMap
-    val bySuper: Seq[(Int, Array[(Int, Array[Double])])] =
-      model.last.groupBy(m => membership(m._1)).toSeq.sortBy(_._1)
-        .map { case (s, members) => s -> members.sortBy(_._1) }
-    RoutingTable(
-      bySuper.map { case (s, _) => s -> superCent(s) }.toArray,
-      bySuper)
+  sealed trait Assigner
+  object Assigner {
+    final case class Exact(model: KmeansModel) extends Assigner
+    final case class Routed(routing: FramedRouting, nProbe: Int = 1)
+        extends Assigner {
+      require(nProbe >= 1, "nProbe must be >= 1")
+    }
+    final case class Routed3(routing: FramedRouting3, nProbe: Int = 1)
+        extends Assigner {
+      require(nProbe >= 1, "nProbe must be >= 1")
+    }
   }
 
-  /** Routed assignment under a prebuilt [[RoutingTable]] — pure
-    * map-side work: one kernel call over the supers, then an
-    * nSupers-way branch of ONE kernel call each over that super's
-    * member centroids (generated code grows with √k, not k). */
-  def routedAssign(vecs: DataFrame, idCol: String, vecCol: String,
-                   routing: RoutingTable): DataFrame = {
-    val routed = vecs
-      .select(col(idCol).as("id"),
-              col(vecCol).cast("array<double>").as("v"))
-      .select(col("id"), col("v"),
-              argminStruct(col("v"), routing.routeCents)
-                .getField("cluster").as("super"))
-    routed.select(col("id"), routedBest(routing).as("best"), col("super"))
-      .select(col("id"), col("best.cluster").as("cluster"),
-              floor(col("best.d") * lit(Q)).cast("long").as("dq"),
-              col("super"))
+  /** Assignment under `by`: (id, cluster, dq) per vector — plus `super`
+    * for [[Assigner.Routed]] and `super, mid` for [[Assigner.Routed3]]
+    * (the probed cell the winning centroid belongs to). The quantized
+    * distance keeps the output engine-exact. */
+  def assign(vecs: DataFrame, idCol: String, vecCol: String,
+             by: Assigner): DataFrame =
+    decide(vecs, idCol, vecCol, by).drop("v")
+
+  /** The staged SemDeDup frame — (id, v, nrm, cluster, dq) under `by`:
+    * ONE corpus scan + argmin feeds BOTH the within-cell pair search
+    * ([[pairsOf]]) and the farthest-from-centroid keep rule (VERDICT
+    * r16 #2: the prune demos used to re-assign the whole corpus a
+    * second time just to recover `dq`). Persisted for the session (the
+    * Ivf.nearDupPairs cache stance: CacheManager dedups repeat calls,
+    * clearCache() reclaims between corpora) — every downstream consumer
+    * reads the cache, so the assignment scan runs exactly once.
+    */
+  def semStage(vecs: DataFrame, idCol: String, vecCol: String,
+               by: Assigner): DataFrame =
+    decide(vecs, idCol, vecCol, by)
+      .select(col("id"), col("v"), Similarity.norm(col("v")).as("nrm"),
+              col("cluster"), col("dq"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** Within-cluster exact-cosine near-dup pairs over the cells `by`
+    * assigns — the candidate generator of SemDeDup (Abbas et al. 2023,
+    * arXiv:2303.09540): duplicates are only searched INSIDE a semantic
+    * cluster, so candidate volume is Σ|cell|² instead of n² (with k
+    * grown ∝ n, cell sizes — and the per-cell quadratic — stay
+    * bounded; the paper uses the same argument). Under a routed
+    * assigner a pair is missed iff routing SPLITS it across cells
+    * where exact assignment co-located it (SCALECURVE §12 measures
+    * that recall on planted twins). Prefer [[semStage]] + [[pairsOf]]
+    * when the keep rule also needs the distances — this convenience
+    * form builds (and caches) the same staged frame.
+    */
+  def nearDupPairs(vecs: DataFrame, idCol: String, vecCol: String,
+                   by: Assigner, threshold: Double): DataFrame =
+    pairsOf(semStage(vecs, idCol, vecCol, by), threshold)
+
+  /** The one decide step: (id, v, cluster, dq[, super[, mid]]). */
+  private def decide(vecs: DataFrame, idCol: String, vecCol: String,
+                     by: Assigner): DataFrame = {
+    val prepped = vecs.select(col(idCol).as("id"),
+                              col(vecCol).cast("array<double>").as("v"))
+    val (best, cell) = by match {
+      case Assigner.Exact(model) =>
+        (prepped.select(col("id"), col("v"),
+           argminStruct(col("v"), model.last).as("best")), Nil)
+      case Assigner.Routed(routing, nProbe) =>
+        (routedBest(prepped, routing, nProbe), Seq("super"))
+      case Assigner.Routed3(routing, nProbe) =>
+        (routed3Best(prepped, routing, nProbe), Seq("super", "mid"))
+    }
+    best.select(Seq(col("id"), col("v"), col("best.cluster").as("cluster"),
+        floor(col("best.d") * lit(Q)).cast("long").as("dq")) ++
+      cell.map(c => col(s"best.$c").as(c)): _*)
   }
 
   /** The multi-probe twin of [[argminStruct]]'s loud-failure guard:
@@ -518,154 +508,11 @@ object Kmeans {
       "fix them first")))
       .otherwise(probes)
 
-  /** The within-routed-super member argmin (struct(cluster, d)) over
-    * the literal member tables — expects columns `v` and `super` in
-    * scope. One kernel call per populated super behind an nSupers-way
-    * branch: generated code grows with √k, not k. */
-  private def routedBest(routing: RoutingTable): Column =
-    routing.members.tail.foldLeft(
-      when(col("super") === routing.members.head._1,
-        graft.functions.NearestCentroid(col("v"),
-          routing.members.head._2))) {
-      case (acc, (s, members)) =>
-        acc.when(col("super") === s,
-          graft.functions.NearestCentroid(col("v"), members))
-    }
-
-  /** MULTI-PROBE routed assignment — bounds the nProbe=1 quality trade
-    * the IVF way: route each vector to its `nProbe` nearest supers
-    * (native [[graft.functions.NearestCentroids]] kernel — the same
-    * distance fold and (d, id) tie order as single-probe routing, so
-    * nProbe=1 here is bit-equal to [[routedAssign]]) and argmin over
-    * the UNION of the probed supers' member sets. A vector whose true
-    * nearest centroid lives in its second-nearest super — exactly the
-    * case nProbe=1 loses — is now recovered; flops grow to
-    * ~n·(√k + nProbe·√k)·d, still far under exact n·k·d.
-    *
-    * Still fully deterministic: probed member sets are DISJOINT
-    * (each centroid belongs to one super), so the cross-slot
-    * `least` by (d, cluster) can never see an ambiguous tie, and an
-    * independent SQL engine replays the whole decision (top-nProbe
-    * supers by the same window order, then one argmin over the joined
-    * members). `super` in the output is the probed super the winning
-    * centroid belongs to.
-    */
-  def routedAssign(vecs: DataFrame, idCol: String, vecCol: String,
-                   routing: RoutingTable, nProbe: Int): DataFrame = {
-    require(nProbe >= 1, "nProbe must be >= 1")
-    if (nProbe == 1) return routedAssign(vecs, idCol, vecCol, routing)
-    val routed = vecs
-      .select(col(idCol).as("id"),
-              col(vecCol).cast("array<double>").as("v"))
-      .select(col("id"), col("v"),
-              probesGuard(graft.functions.NearestCentroids(col("v"),
-                routing.routeCents, nProbe)).as("probes"))
-    // per probe slot: the within-super member argmin as a
-    // (d, cluster, super) struct — comparison order first, so the
-    // cross-slot least() ranks by exactly (d, cluster)
-    def slotStruct(superCol: Column): Column = {
-      def entry(s: Int, members: Array[(Int, Array[Double])]): Column = {
-        val nc = graft.functions.NearestCentroid(col("v"), members)
-        struct(nc.getField("d").as("d"),
-               nc.getField("cluster").as("cluster"),
-               lit(s).as("super"))
-      }
-      routing.members.tail.foldLeft(
-        when(superCol === routing.members.head._1,
-          entry(routing.members.head._1, routing.members.head._2))) {
-        case (acc, (s, members)) => acc.when(superCol === s, entry(s, members))
-      }
-    }
-    val slots = (1 to nProbe).map { i =>
-      // a corpus with fewer populated supers than nProbe yields a
-      // short probes array; get() (0-based) returns null past the end
-      // — element_at THROWS there under Spark 4's default ANSI mode —
-      // and least() skips the null slots
-      val sc = get(col("probes"), lit(i - 1))
-      when(sc.isNotNull, slotStruct(sc))
-    }
-    routed.select(col("id"), least(slots: _*).as("best"))
-      .select(col("id"), col("best.cluster").as("cluster"),
-              floor(col("best.d") * lit(Q)).cast("long").as("dq"),
-              col("best.super").as("super"))
-  }
-
-  /** FRAME-RESIDENT two-level routing — the production-k scale path.
-    * [[RoutingTable]] embeds all k member centroids in the PLAN (√k
-    * `when` branches of literal tables) after a k·d driver collect —
-    * fine to k in the thousands, a hard wall at the SemDeDup regime
-    * (n=10⁹, cell≈512 → k≈2M, d=768 is tens of GB of driver state).
-    * Here only the √k SUPER centroids are literals; the k member
-    * centroids stay a DataFrame keyed by super, and assignment becomes
-    * map-side super route → equi-join on `super` (broadcast when the
-    * member table is small, shuffle otherwise — Catalyst/AQE's call) →
-    * per-vector argmin. The decision — and every tie — is bit-equal to
-    * [[routedAssign]] on the same routing (ExtensionsSpec pins it):
-    * same sequential-fold distances, same (d, cluster) argmin order.
-    */
-  final case class FramedRouting(
-      routeCents: Array[(Int, Array[Double])],
-      members: DataFrame)
-
-  /** Derive frame-resident routing from a CENTROID FRAME
-    * `cents(clusterCol int, cvCol array<double>)` — the exact
-    * [[routingFor]] decision (one Lloyd round over the centroid rows,
-    * membership under the updated supers, empty supers dropped) with
-    * driver state bounded by nSupers·d, NEVER k·d: the super training
-    * collects nSupers init rows + nSupers·d update sums, membership
-    * stays a frame, and only the ≤nSupers populated-super ids collect.
-    */
-  def framedRoutingFor(cents: DataFrame, clusterCol: String,
-                       cvCol: String, nSupers: Int): FramedRouting = {
-    require(nSupers >= 1, "nSupers must be >= 1")
-    val cd = cents.select(col(clusterCol).cast("int").as("cluster"),
-                          col(cvCol).cast("array<double>").as("cv"))
-    // the literal routingFor's nSupers <= k contract, frame form: with
-    // more supers than centroid rows lloyd's limit-k init would just
-    // train fewer supers SILENTLY and the two bit-equal entry points
-    // would diverge on invalid input. One count over the k-row centroid
-    // frame — index-build-time cost, k rows vs the n-row corpus.
-    val nCents = cd.count()
-    require(nSupers <= nCents,
-      s"nSupers must be in [1, k] — got $nSupers supers over $nCents " +
-        "centroid rows")
-    val superModel = lloyd(cd, "cluster", "cv", k = nSupers, rounds = 1)
-    // (cluster, super): each member centroid's routed super — a FRAME
-    val membership = assign(cd, "cluster", "cv", superModel)
-      .select(col("id").as("cluster"), col("cluster").as("super"))
-    val populated = membership.select("super").distinct()
-      .collect().map(_.getInt(0)).toSet // ≤ nSupers rows by construction
-    FramedRouting(
-      superModel.last.filter { case (s, _) => populated(s) },
-      cd.join(membership, "cluster").select("super", "cluster", "cv"))
-  }
-
-  /** Routed assignment under FRAME-RESIDENT member centroids: one
-    * map-side super route (√k literals), then ONE 1:1 equi-join on
-    * `super` against the member table pre-grouped into a sorted
-    * per-super centroid ARRAY (k·d data total, √k rows — broadcast
-    * when it fits, an n-row shuffle by `super` otherwise), then the
-    * argmin as a map-side `aggregate` fold over that array — no row
-    * expansion, no aggregation operator, no extra exchange (the first
-    * cut grouped n·k/√k candidate ROWS by id, and `min(struct)` can't
-    * hash-aggregate — Spark sorted 10M candidate rows in a
-    * SortAggregate; this plan keeps n rows end to end).
-    *
-    * Fold parity with the NearestCentroid kernel, stated exactly:
-    * seeds from member 0, strict `<` replacement walking the array in
-    * ascending-cluster order (so a distance tie keeps the earlier =
-    * smaller cluster id), Spark's NaN-greatest comparison semantics —
-    * the same total order, bit for bit (ExtensionsSpec pins it).
-    * Ragged input vectors fail loudly at the route step (the
-    * argminStruct guard); member centroids are model-derived and share
-    * the route dimension, so the fold can never see a length mismatch.
-    *
-    * @return (id, cluster, dq, super) — bit-equal to [[routedAssign]]
-    */
-  def framedAssign(vecs: DataFrame, idCol: String, vecCol: String,
-                   routing: FramedRouting): DataFrame =
-    framedAssignWithV(vecs, idCol, vecCol, routing)
-      .select("id", "cluster", "dq", "super")
+  /** The cross-slot decision: `least` by the slot structs' leading
+    * (d, cluster) fields. Spark's `least` needs two arguments, so a
+    * single probe slot is its own answer. */
+  private def leastOf(slots: Seq[Column]): Column =
+    if (slots.size == 1) slots.head else least(slots: _*)
 
   /** (super, marr): each populated super's member centroids as ONE
     * array row sorted by cluster id — the NearestCentroid position-
@@ -678,33 +525,154 @@ object Kmeans {
 
   /** The map-side argmin over a member-array column — the native
     * [[graft.functions.NearestCentroidIn]] kernel: one generated
-    * static call per row (the composed `aggregate(slice(...))` HOF
-    * form was interpreted and allocated a zip_with intermediate per
-    * member per row — an order-of-magnitude wall regression at
-    * k/√k = 100 members, caught by SCALECURVE §12b). Same seed /
-    * tie / fold semantics as the literal kernel, bit for bit.
-    * Expects the vector in scope as column `v`. */
+    * static call per row (the composed HOF form was an order-of-
+    * magnitude wall regression, SCALECURVE §12b). Seeds from member 0,
+    * strict `<` walking ascending cluster ids — the literal kernel's
+    * tie order, bit for bit. Expects the vector in scope as `v`. */
   private def marrBest(marrCol: Column): Column =
     graft.functions.NearestCentroidIn(col("v"), marrCol)
 
-  /** [[framedAssign]] keeping the vector column — the framed Lloyd
-    * round's input (the update re-reads v; carrying it through the
-    * argmin avoids a second corpus join). */
-  private def framedAssignWithV(vecs: DataFrame, idCol: String,
-                                vecCol: String,
-                                routing: FramedRouting): DataFrame = {
-    val routed = vecs
-      .select(col(idCol).as("id"),
-              col(vecCol).cast("array<double>").as("v"))
-      .select(col("id"), col("v"),
-              argminStruct(col("v"), routing.routeCents)
-                .getField("cluster").as("super"))
-    routed.join(memberArrays(routing), "super")
-      .select(col("id"), col("v"), marrBest(col("marr")).as("best"),
-              col("super"))
-      .select(col("id"), col("v"), col("best.cluster").as("cluster"),
-              floor(col("best.d") * lit(Q)).cast("long").as("dq"),
-              col("super"))
+  /** Two-level routed decision over `prepped(id, v)`: the nProbe
+    * nearest supers from the literal kernel, then per probe slot ONE
+    * 1:1 left join of that super's member array (broadcast when it
+    * fits, a shuffle by `super` otherwise — Catalyst/AQE's call) and a
+    * map-side argmin fold, then a map-side `least` by (d, cluster)
+    * across slots. n rows end to end — no row expansion, no
+    * aggregation operator. Probed member sets are DISJOINT (each
+    * centroid belongs to one super), so the cross-slot order is total.
+    * A corpus with fewer populated supers than nProbe yields short
+    * probe arrays: get() (0-based) is null past the end (element_at
+    * THROWS there under Spark 4's default ANSI mode), the slot's
+    * struct stays null and least() skips it.
+    * @return (id, v, best: struct(d, cluster, super))
+    */
+  private def routedBest(prepped: DataFrame, routing: FramedRouting,
+                         nProbe: Int): DataFrame = {
+    val marr = memberArrays(routing)
+    val routed = prepped.select(col("id"), col("v"),
+      probesGuard(graft.functions.NearestCentroids(col("v"),
+        routing.routeCents, nProbe)).as("probes"))
+    val joined = (1 to nProbe).foldLeft(routed) { (acc, i) =>
+      // the slot REDUCES to its argmin struct right after its join and
+      // the member array drops BEFORE the next join's exchange (r18:
+      // carrying every marr_i to a final select made each successive
+      // shuffle haul all prior slots' arrays — a 15× wall)
+      val b = marrBest(col(s"marr_$i"))
+      acc.join(marr.select(col("super").as(s"super_$i"),
+                           col("marr").as(s"marr_$i")),
+        get(col("probes"), lit(i - 1)) === col(s"super_$i"), "left")
+        .withColumn(s"best_$i",
+          when(col(s"super_$i").isNotNull,
+            struct(b.getField("d").as("d"),
+                   b.getField("cluster").as("cluster"),
+                   col(s"super_$i").as("super"))))
+        .drop(s"marr_$i", s"super_$i")
+    }
+    joined.select(col("id"), col("v"),
+      leastOf((1 to nProbe).map(i => col(s"best_$i"))).as("best"))
+  }
+
+  /** Three-level routed decision over `prepped(id, v)` — the two-level
+    * composition one level deeper: the nProbe nearest SUPERS from the
+    * literal kernel, each probed super's MID array 1:1-joins and its
+    * nProbe nearest mids come from the frame-resident multi-probe
+    * kernel ([[graft.functions.NearestCentroidsIn]] — same fold, order
+    * and ties as the literal one), each of the ≤ nProbe² (super, mid)
+    * leaf slots 1:1-joins its member array, and the cross-slot
+    * decision is a map-side `least` by (d, cluster) — leaf member sets
+    * are disjoint, so the order is total. Short-probe safety is the
+    * two-level path's: null join keys via get(), null slots drop out
+    * of least().
+    * @return (id, v, best: struct(d, cluster, super, mid))
+    */
+  private def routed3Best(prepped: DataFrame, routing: FramedRouting3,
+                          nProbe: Int): DataFrame = {
+    val midArr = routing.mids.groupBy("super")
+      .agg(array_sort(collect_list(struct(col("mid"), col("mcv"))))
+        .as("midarr"))
+    val marr = routing.members.groupBy("super", "mid")
+      .agg(array_sort(collect_list(struct(col("cluster"), col("cv"))))
+        .as("marr"))
+    val routed = prepped.select(col("id"), col("v"),
+      probesGuard(graft.functions.NearestCentroids(col("v"),
+        routing.routeCents, nProbe)).as("sprobes"))
+    // per probed super: its nProbe nearest mids, ONE kernel call over
+    // the joined mid array, the array dropped before the next exchange
+    val withMids = (1 to nProbe).foldLeft(routed) { (acc, i) =>
+      acc.join(midArr.select(col("super").as(s"super_$i"),
+                             col("midarr").as(s"midarr_$i")),
+        get(col("sprobes"), lit(i - 1)) === col(s"super_$i"), "left")
+        .withColumn(s"mprobes_$i",
+          graft.functions.NearestCentroidsIn(col("v"), col(s"midarr_$i"),
+            nProbe))
+        .drop(s"midarr_$i")
+    }
+    val slotKeys = for { i <- 1 to nProbe; j <- 1 to nProbe } yield (i, j)
+    // each leaf slot reduces to its argmin struct right after its join
+    // (the two-level early-projection rule)
+    val joined = slotKeys.foldLeft(withMids) { case (acc, (i, j)) =>
+      val b = marrBest(col(s"marr_${i}_$j"))
+      acc.join(marr.select(col("super").as(s"s_${i}_$j"),
+                           col("mid").as(s"m_${i}_$j"),
+                           col("marr").as(s"marr_${i}_$j")),
+        col(s"super_$i") === col(s"s_${i}_$j") &&
+          get(col(s"mprobes_$i"), lit(j - 1)) === col(s"m_${i}_$j"),
+        "left")
+        .withColumn(s"best_${i}_$j",
+          when(col(s"s_${i}_$j").isNotNull,
+            struct(b.getField("d").as("d"),
+                   b.getField("cluster").as("cluster"),
+                   col(s"s_${i}_$j").as("super"),
+                   col(s"m_${i}_$j").as("mid"))))
+        .drop(s"marr_${i}_$j", s"s_${i}_$j", s"m_${i}_$j")
+    }
+    joined.select(col("id"), col("v"),
+      leastOf(slotKeys.map { case (i, j) => col(s"best_${i}_$j") })
+        .as("best"))
+  }
+
+  /** FRAME-RESIDENT two-level routing — the production-k scale path.
+    * Only the √k SUPER centroids are literals; the k member centroids
+    * stay a DataFrame keyed by super — no k·d driver collect and no
+    * k·d plan literal, which is a hard wall at the SemDeDup regime
+    * (n=10⁹, cell≈512 → k≈2M, d=768 is tens of GB of driver state).
+    * The member table is one more DataFrame Catalyst plans, broadcast
+    * or shuffled by size.
+    */
+  final case class FramedRouting(
+      routeCents: Array[(Int, Array[Double])],
+      members: DataFrame)
+
+  /** Derive frame-resident routing from a CENTROID FRAME
+    * `cents(clusterCol int, cvCol array<double>)`: one Lloyd round over
+    * the centroid rows, membership under the updated supers, empty
+    * supers dropped (a vector can only route where an answer exists).
+    * Driver state is bounded by nSupers·d, NEVER k·d: the super
+    * training collects nSupers init rows + nSupers·d update sums,
+    * membership stays a frame, and only the ≤nSupers populated-super
+    * ids collect.
+    */
+  def framedRoutingFor(cents: DataFrame, clusterCol: String,
+                       cvCol: String, nSupers: Int): FramedRouting = {
+    require(nSupers >= 1, "nSupers must be >= 1")
+    val cd = cents.select(col(clusterCol).cast("int").as("cluster"),
+                          col(cvCol).cast("array<double>").as("cv"))
+    // with more supers than centroid rows lloyd's limit-k init would
+    // just train fewer supers SILENTLY. One count over the k-row
+    // centroid frame — index-build-time cost, k rows vs the n-row corpus.
+    val nCents = cd.count()
+    require(nSupers <= nCents,
+      s"nSupers must be in [1, k] — got $nSupers supers over $nCents " +
+        "centroid rows")
+    val superModel = lloyd(cd, "cluster", "cv", k = nSupers, rounds = 1)
+    // (cluster, super): each member centroid's routed super — a FRAME
+    val membership = assign(cd, "cluster", "cv", Assigner.Exact(superModel))
+      .select(col("id").as("cluster"), col("cluster").as("super"))
+    val populated = membership.select("super").distinct()
+      .collect().map(_.getInt(0)).toSet // ≤ nSupers rows by construction
+    FramedRouting(
+      superModel.last.filter { case (s, _) => populated(s) },
+      cd.join(membership, "cluster").select("super", "cluster", "cv"))
   }
 
   /** THREE-LEVEL frame-resident routing (VERDICT r16 #2) — kills the
@@ -722,10 +690,10 @@ object Kmeans {
     * assignment is ~n·3k^(1/3)·d flops — three map-side argmin folds
     * behind two 1:1 equi-joins, n rows end to end.
     *
-    * Approximation contract: the decision differs from [[assign]]
-    * (and from two-level routing) exactly when the true nearest
-    * centroid lives outside the routed super OR outside the routed
-    * mid — one more nProbe=1 trade, measured like §12's twin recall.
+    * Approximation contract: the decision differs from the exact
+    * argmin (and from two-level routing) exactly when the true nearest
+    * centroid lives outside the probed supers OR outside the probed
+    * mids — one more nProbe trade, measured like §12's twin recall.
     * Every step is deterministic (fixed-point arithmetic, sorted
     * arrays, position-tie = id-tie argmins), so an independent SQL
     * engine replays the whole three-level decision bit-for-bit.
@@ -802,233 +770,72 @@ object Kmeans {
     FramedRouting3(l1.routeCents, popMids, mm)
   }
 
-  /** Three-level assignment under [[FramedRouting3]]: literal super
-    * route → 1:1 join on `super` against the per-super MID array →
-    * map-side mid argmin → 1:1 join on (super, mid) against the leaf
-    * member array → map-side member argmin. No row expansion, no
-    * aggregation operator; every joined array row is O(k^(1/3)·d).
-    *
-    * @return (id, cluster, dq, super, mid)
-    */
-  def framedAssign3(vecs: DataFrame, idCol: String, vecCol: String,
-                    routing: FramedRouting3): DataFrame =
-    framedAssign3WithV(vecs, idCol, vecCol, routing)
-      .select("id", "cluster", "dq", "super", "mid")
-
-  /** [[framedAssign3]] keeping the vector column — the three-level
-    * staging's input (the [[framedAssignWithV]] stance one level
-    * deeper). */
-  private def framedAssign3WithV(vecs: DataFrame, idCol: String,
-                                 vecCol: String,
-                                 routing: FramedRouting3): DataFrame = {
-    val midArr = routing.mids.groupBy("super")
-      .agg(array_sort(collect_list(struct(col("mid"), col("mcv"))))
-        .as("midarr"))
-    val marr = routing.members.groupBy("super", "mid")
-      .agg(array_sort(collect_list(struct(col("cluster"), col("cv"))))
-        .as("marr"))
-    vecs
-      .select(col(idCol).as("id"),
-              col(vecCol).cast("array<double>").as("v"))
-      .select(col("id"), col("v"),
-              argminStruct(col("v"), routing.routeCents)
-                .getField("cluster").as("super"))
-      .join(midArr, "super")
-      .select(col("id"), col("v"), col("super"),
-              graft.functions.NearestCentroidIn(col("v"), col("midarr"))
-                .getField("cluster").as("mid"))
-      .join(marr, Seq("super", "mid"))
-      .select(col("id"), col("v"), marrBest(col("marr")).as("best"),
-              col("super"), col("mid"))
-      .select(col("id"), col("v"), col("best.cluster").as("cluster"),
-              floor(col("best.d") * lit(Q)).cast("long").as("dq"),
-              col("super"), col("mid"))
-  }
-
-  /** MULTI-PROBE three-level assignment (VERDICT r17 #3) — the
-    * two-level nProbe composition one level deeper, so the deepest
-    * path no longer compounds two nProbe=1 trades with no recovery
-    * knob: the nProbe nearest SUPERS come from the literal kernel,
-    * each probed super's MID table 1:1-joins and the nProbe nearest
-    * mids come from the frame-resident multi-probe kernel
-    * ([[graft.functions.NearestCentroidsIn]] — same fold/order/tie
-    * semantics as the literal one, table read from data), each of the
-    * ≤ nProbe² (super, mid) leaf slots 1:1-joins its member array,
-    * and the cross-slot decision is a map-side `least` by
-    * (d, cluster) — leaf member sets are DISJOINT (each cluster lives
-    * in exactly one (super, mid) cell), so the order is total. n rows
-    * end to end: nProbe + nProbe² 1:1 joins, never a row expansion or
-    * an aggregation operator; flops ~n·(k^(1/3) + nProbe·k^(1/3) +
-    * nProbe²·k^(1/3))·d, still far under exact n·k·d. With nProbe
-    * covering every populated super and mid the candidate set is ALL
-    * clusters, so the decision equals the EXACT argmin
-    * (ExtensionsSpec pins it); the oracle replays the whole
-    * composition (top-nProbe supers, top-nProbe mids per probed
-    * super, one argmin over the joined leaf members).
-    *
-    * Short-probe safety mirrors the two-level path: fewer populated
-    * supers (or mids within a super) than nProbe leaves the slot's
-    * join key null via get() — null slots drop out of least().
-    *
-    * @return (id, cluster, dq, super, mid) — super/mid are the probed
-    *         cell the winning cluster belongs to
-    */
-  def framedAssign3(vecs: DataFrame, idCol: String, vecCol: String,
-                    routing: FramedRouting3, nProbe: Int): DataFrame = {
-    require(nProbe >= 1, "nProbe must be >= 1")
-    if (nProbe == 1) return framedAssign3(vecs, idCol, vecCol, routing)
-    val midArr = routing.mids.groupBy("super")
-      .agg(array_sort(collect_list(struct(col("mid"), col("mcv"))))
-        .as("midarr"))
-    val marr = routing.members.groupBy("super", "mid")
-      .agg(array_sort(collect_list(struct(col("cluster"), col("cv"))))
-        .as("marr"))
-    val routed = vecs
-      .select(col(idCol).as("id"),
-              col(vecCol).cast("array<double>").as("v"))
-      .select(col("id"), col("v"),
-              probesGuard(graft.functions.NearestCentroids(col("v"),
-                routing.routeCents, nProbe)).as("sprobes"))
-    // per probed super: its nProbe nearest mids, ONE kernel call over
-    // the joined mid array — computed immediately after the join and
-    // the mid array DROPPED before the next exchange (the same
-    // early-projection rule as the leaf slots below)
-    val withMids = (1 to nProbe).foldLeft(routed) { (acc, i) =>
-      acc.join(midArr.select(col("super").as(s"super_$i"),
-                             col("midarr").as(s"midarr_$i")),
-        get(col("sprobes"), lit(i - 1)) === col(s"super_$i"), "left")
-        .withColumn(s"mprobes_$i",
-          graft.functions.NearestCentroidsIn(col("v"), col(s"midarr_$i"),
-            nProbe))
-        .drop(s"midarr_$i")
-    }
-    val slotKeys = for { i <- 1 to nProbe; j <- 1 to nProbe } yield (i, j)
-    // each leaf slot REDUCES to its argmin struct right after its 1:1
-    // join and the member array drops before the next join's exchange
-    // (r18: carrying every marr_{i,j} to a final combined select made
-    // each successive shuffle haul all prior slots' k^(1/3)·d arrays
-    // per row — a 15× wall and a disk-spill explosion at the §12c
-    // octave; slot values are per-row, so early projection is
-    // semantics-free)
-    val joined = slotKeys.foldLeft(withMids) { case (acc, (i, j)) =>
-      val b = marrBest(col(s"marr_${i}_$j"))
-      acc.join(marr.select(col("super").as(s"s_${i}_$j"),
-                           col("mid").as(s"m_${i}_$j"),
-                           col("marr").as(s"marr_${i}_$j")),
-        col(s"super_$i") === col(s"s_${i}_$j") &&
-          get(col(s"mprobes_$i"), lit(j - 1)) === col(s"m_${i}_$j"),
-        "left")
-        .withColumn(s"best_${i}_$j",
-          when(col(s"s_${i}_$j").isNotNull,
-            struct(b.getField("d").as("d"),
-                   b.getField("cluster").as("cluster"),
-                   col(s"s_${i}_$j").as("super"),
-                   col(s"m_${i}_$j").as("mid"))))
-        .drop(s"marr_${i}_$j", s"s_${i}_$j", s"m_${i}_$j")
-    }
-    val slots = slotKeys.map { case (i, j) => col(s"best_${i}_$j") }
-    joined.select(col("id"), least(slots: _*).as("best"))
-      .select(col("id"), col("best.cluster").as("cluster"),
-              floor(col("best.d") * lit(Q)).cast("long").as("dq"),
-              col("best.super").as("super"), col("best.mid").as("mid"))
-  }
-
-  /** [[semStageFramed]] with THREE-LEVEL routing — the deepest
-    * production staging: SemDeDup-regime k needs the routed flop
-    * count, frame-resident centroids, AND bounded member-array rows;
-    * this is all three. One scan feeds pairs and the keep rule, as
-    * everywhere in the [[semStage]] family. */
-  def semStageFramed3(vecs: DataFrame, idCol: String, vecCol: String,
-                      routing: FramedRouting3): DataFrame =
-    stagedOf(framedAssign3WithV(vecs, idCol, vecCol, routing))
-
-  /** MULTI-PROBE frame-resident assignment — [[routedAssign]]'s
-    * nProbe ≥ 2 quality recovery composed with [[framedAssign]]'s
-    * no-k·d-driver-state scale path: the nProbe nearest supers come
-    * from the same literal kernel (supers are √k — always plan-sized),
-    * each probe slot 1:1-joins its member array, the per-slot argmin
-    * is the same map-side fold, and the cross-slot decision is a
-    * map-side `least` by (d, cluster) — n ROWS end to end (nProbe
-    * 1:1 joins, never a row expansion or an aggregation operator).
-    * Bit-equal to `routedAssign(..., nProbe)` (ExtensionsSpec pins
-    * it; the demo shares its oracle).
-    */
-  def framedAssign(vecs: DataFrame, idCol: String, vecCol: String,
-                   routing: FramedRouting, nProbe: Int): DataFrame = {
-    require(nProbe >= 1, "nProbe must be >= 1")
-    if (nProbe == 1) return framedAssign(vecs, idCol, vecCol, routing)
-    val marr = memberArrays(routing)
-    val routed = vecs
-      .select(col(idCol).as("id"),
-              col(vecCol).cast("array<double>").as("v"))
-      .select(col("id"), col("v"),
-              probesGuard(graft.functions.NearestCentroids(col("v"),
-                routing.routeCents, nProbe)).as("probes"))
-    val joined = (1 to nProbe).foldLeft(routed) { (acc, i) =>
-      // left join: a corpus with fewer populated supers than nProbe
-      // yields short probe arrays — get() (0-based) is null past the
-      // end (element_at THROWS there under Spark 4's default ANSI
-      // mode), the slot's struct stays null and least() skips it.
-      // The slot REDUCES to its argmin struct immediately after its
-      // join and the member array drops BEFORE the next join's
-      // exchange (r18: letting every marr_i survive to a final
-      // combined select meant each successive shuffle carried all
-      // prior slots' k/√k·d arrays per row — a row-width explosion
-      // that turned the p2 wall 15× and spilled whole disks at the
-      // §12c octave; slot values are per-row, so early projection is
-      // semantics-free)
-      val b = marrBest(col(s"marr_$i"))
-      acc.join(marr.select(col("super").as(s"super_$i"),
-                           col("marr").as(s"marr_$i")),
-        get(col("probes"), lit(i - 1)) === col(s"super_$i"), "left")
-        .withColumn(s"best_$i",
-          when(col(s"super_$i").isNotNull,
-            struct(b.getField("d").as("d"),
-                   b.getField("cluster").as("cluster"),
-                   col(s"super_$i").as("super"))))
-        .drop(s"marr_$i", s"super_$i")
-    }
-    val slots = (1 to nProbe).map(i => col(s"best_$i"))
-    joined.select(col("id"), least(slots: _*).as("best"))
-      .select(col("id"), col("best.cluster").as("cluster"),
-              floor(col("best.d") * lit(Q)).cast("long").as("dq"),
-              col("best.super").as("super"))
-  }
-
   /** FRAME-RESIDENT Lloyd training — the large-k companion of
     * [[lloyd]]: centroids live in a (cluster, cv) DataFrame between
-    * rounds, assignment is the framed routed path, and the update is a
-    * (cluster, pos)-keyed aggregation that STAYS a frame — the driver
-    * never holds k·d state (per round it holds nSupers·d super sums +
-    * the populated-super id set, both √k-bounded). With `nSupers = 1`
-    * routing is a single all-members super, assignment degenerates to
-    * the exact argmin, and the trajectory is bit-equal to [[lloyd]]'s
+    * rounds, assignment is [[Assigner.Routed]] under routing re-derived
+    * from each round's centroids, and the update is a (cluster, pos)-
+    * keyed aggregation that STAYS a frame — the driver never holds k·d
+    * state (per round it holds nSupers·d super sums + the populated-
+    * super id set, both √k-bounded). With `nSupers = 1` routing is a
+    * single all-members super, assignment degenerates to the exact
+    * argmin, and the trajectory is bit-equal to [[lloyd]]'s
     * (ExtensionsSpec pins it); with nSupers ≈ √k each round pays the
-    * routed flop count — the approximation the SemDeDup regime runs
-    * (assignment under the final frame differs from exact Lloyd
-    * exactly where [[routedAssign]] differs from [[assign]]).
+    * routed flop count — the approximation the SemDeDup regime runs.
     *
     * Exactness stance matches [[lloyd]]: fixed-point DECIMAL(38,0)
     * sums, loud overflow on the long downcast, identical init (k
     * smallest ids, positional cluster ids).
     *
-    * @return the final (cluster, cv) centroid frame
+    * @return the final round's FULL fixed-point state — (cluster, pos,
+    *         sq, n, c), persisted, the frame twin of [[stateFrame]]: the
+    *         restorable artifact [[incrementalUpdateFramed]] consumes,
+    *         and [[centroidsOf]] turns it into the (cluster, cv) frame
+    *         [[framedRoutingFor]] reads
     */
   def lloydFramed(vecs: DataFrame, idCol: String, vecCol: String,
-                  k: Int, rounds: Int, nSupers: Int): DataFrame =
-    lloydFramedLoop(vecs, idCol, vecCol, k, rounds, nSupers, wantState = false)
-
-  /** [[lloydFramed]] returning the final round's FULL fixed-point
-    * state — (cluster, pos, sq, n, c), the frame twin of
-    * [[stateFrame]] — instead of the collapsed centroid arrays: the
-    * restorable training artifact the frame-resident ONLINE path
-    * ([[incrementalUpdateFramed]], `VecsStream.kmeansIngestFramed`)
-    * consumes, so training → landing → streaming updates never
-    * materialize k·d rows on the driver at any step.
-    */
-  def lloydFramedState(vecs: DataFrame, idCol: String, vecCol: String,
-                       k: Int, rounds: Int, nSupers: Int): DataFrame =
-    lloydFramedLoop(vecs, idCol, vecCol, k, rounds, nSupers, wantState = true)
+                  k: Int, rounds: Int, nSupers: Int): DataFrame = {
+    require(k >= 1 && rounds >= 1, "k and rounds must be >= 1")
+    val prepped = vecs
+      .select(col(idCol).as("id"),
+              col(vecCol).cast("array<double>").as("v"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val kept = scala.collection.mutable.Buffer.empty[DataFrame]
+    try {
+      var cents = framedInitCentroids(prepped, k)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      kept += cents
+      var state: DataFrame = null
+      for (_ <- 1 to rounds) {
+        val routing = framedRoutingFor(cents, "cluster", "cv", nSupers)
+        state = decide(prepped, "id", "v", Assigner.Routed(routing))
+          .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "x")))
+          .select(col("cluster"), col("pos"),
+                  floor(col("x") * Q).cast("long").as("q"))
+          .groupBy("cluster", "pos")
+          .agg(sum(col("q").cast("decimal(38,0)")).as("sq"),
+               count(lit(1)).as("n"))
+          .select(col("cluster"), col("pos").cast("long").as("pos"),
+                  sqExactLong("lloydFramed").as("sq"), col("n"))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        kept += state
+        cents = centroidsOf(state)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        kept += cents
+      }
+      val out = state.select(col("cluster"), col("pos"), col("sq"),
+        col("n"), (col("sq").cast("double") /
+          (col("n").cast("double") * lit(Q))).as("c"))
+      // materialize the final frame before releasing the trail so the
+      // per-round caches back each round exactly once; `out` persists
+      // independently of `state`, so the whole trail goes
+      out.persist(StorageLevel.MEMORY_AND_DISK).count()
+      kept.foreach(_.unpersist(false))
+      out
+    } finally {
+      prepped.unpersist(false)
+      ()
+    }
+  }
 
   /** Loud long-downcast guard on a decimal `sq` column: a decimal sum
     * past ±2^63 nulls out under non-ANSI casts — the silent-wrap
@@ -1041,9 +848,10 @@ object Kmeans {
       .otherwise(sqLong)
   }
 
-  /** (cluster, pos, sq, n) long-state frame → (cluster, cv) centroid
-    * frame, the exact [[centsOf]] arithmetic in frame form. */
-  private def centsOfState(state: DataFrame): DataFrame =
+  /** A (cluster, pos, sq, n) fixed-point state frame ([[lloydFramed]],
+    * [[stateFrame]], [[incrementalUpdateFramed]]) → the (cluster, cv)
+    * centroid frame, the exact [[centsOf]] arithmetic in frame form. */
+  def centroidsOf(state: DataFrame): DataFrame =
     state
       .select(col("cluster"), col("pos"),
               (col("sq").cast("double") /
@@ -1078,58 +886,6 @@ object Kmeans {
         "id")
       .select(col("cluster"), col("v").as("cv"))
 
-  private def lloydFramedLoop(vecs: DataFrame, idCol: String,
-                              vecCol: String, k: Int, rounds: Int,
-                              nSupers: Int,
-                              wantState: Boolean): DataFrame = {
-    require(k >= 1 && rounds >= 1, "k and rounds must be >= 1")
-    val prepped = vecs
-      .select(col(idCol).as("id"),
-              col(vecCol).cast("array<double>").as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val kept = scala.collection.mutable.Buffer.empty[DataFrame]
-    try {
-      var cents = framedInitCentroids(prepped, k)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      kept += cents
-      var state: DataFrame = null
-      for (_ <- 1 to rounds) {
-        val routing = framedRoutingFor(cents, "cluster", "cv", nSupers)
-        state = framedAssignWithV(prepped, "id", "v", routing)
-          .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "x")))
-          .select(col("cluster"), col("pos"),
-                  floor(col("x") * Q).cast("long").as("q"))
-          .groupBy("cluster", "pos")
-          .agg(sum(col("q").cast("decimal(38,0)")).as("sq"),
-               count(lit(1)).as("n"))
-          .select(col("cluster"), col("pos").cast("long").as("pos"),
-                  sqExactLong("lloydFramed").as("sq"), col("n"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        kept += state
-        cents = centsOfState(state)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        kept += cents
-      }
-      val out =
-        if (wantState)
-          state.select(col("cluster"), col("pos"), col("sq"), col("n"),
-            (col("sq").cast("double") /
-              (col("n").cast("double") * lit(Q))).as("c"))
-        else cents
-      // materialize the final frame before releasing the trail so the
-      // per-round caches back each round exactly once; the returned
-      // frame keeps its own cache (when wantState, `out` derives from
-      // `state` but persists independently, so the whole trail goes)
-      out.persist(StorageLevel.MEMORY_AND_DISK).count()
-      val keepCached: DataFrame = if (wantState) null else cents
-      kept.filterNot(_ eq keepCached).foreach(_.unpersist(false))
-      out
-    } finally {
-      prepped.unpersist(false)
-      ()
-    }
-  }
-
   /** The model's final centroid table as a (cluster, cv) frame — the
     * bridge from a [[lloyd]]-trained model into the framed assignment
     * path ([[framedRoutingFor]] consumes it). */
@@ -1139,103 +895,6 @@ object Kmeans {
     model.last.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }
       .toDF("cluster", "cv")
   }
-
-  /** The staged SemDeDup frame — (id, v, nrm, cluster, dq) under the
-    * trained model's EXACT assignment: ONE corpus scan + argmin feeds
-    * BOTH the within-cell pair search ([[pairsOf]]) and the farthest-
-    * from-centroid keep rule (VERDICT r16 #2: the prune demos used to
-    * re-assign the whole corpus a second time just to recover `dq`).
-    * Persisted for the session (the Ivf.nearDupPairs cache stance:
-    * CacheManager dedups repeat calls, clearCache() reclaims between
-    * corpora) — every downstream consumer reads the cache, so the
-    * assignment scan runs exactly once.
-    */
-  def semStage(vecs: DataFrame, idCol: String, vecCol: String,
-               model: KmeansModel): DataFrame =
-    stagedOf(vecs
-      .select(col(idCol).as("id"),
-              col(vecCol).cast("array<double>").as("v"))
-      .select(col("id"), col("v"),
-              argminStruct(col("v"), model.last).as("best"))
-      .select(col("id"), col("v"),
-              col("best.cluster").as("cluster"),
-              floor(col("best.d") * lit(Q)).cast("long").as("dq")))
-
-  /** The ONE staging tail the whole semStage family shares — (id, v,
-    * nrm, cluster, dq), persisted: a one-sided edit to any variant's
-    * staged contract would silently diverge the family (the l2sq-
-    * factoring stance). `decided` must carry (id, v, cluster, dq). */
-  private def stagedOf(decided: DataFrame): DataFrame =
-    decided.select(col("id"), col("v"),
-        Similarity.norm(col("v")).as("nrm"),
-        col("cluster"), col("dq"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-  /** [[semStage]] over ROUTED cells — the large-k SemDeDup staging: at
-    * the regime the paper targets (k ∝ n for fixed cell size) the
-    * exact per-vector assignment is the n·k·d wall, so cell membership
-    * AND the keep-rule distance both come from the two-level routed
-    * decision (~n·2√k·d). */
-  def semStageRouted(vecs: DataFrame, idCol: String, vecCol: String,
-                     routing: RoutingTable): DataFrame =
-    stagedOf(vecs
-      .select(col(idCol).as("id"),
-              col(vecCol).cast("array<double>").as("v"))
-      .select(col("id"), col("v"),
-              argminStruct(col("v"), routing.routeCents)
-                .getField("cluster").as("super"))
-      .select(col("id"), col("v"), routedBest(routing).as("best"))
-      .select(col("id"), col("v"),
-              col("best.cluster").as("cluster"),
-              floor(col("best.d") * lit(Q)).cast("long").as("dq")))
-
-  /** [[semStageRouted]] with FRAME-RESIDENT member centroids — the
-    * full production staging: routed flop count AND no k·d driver
-    * state. [[framedAssignWithV]] already computes the (cluster, dq)
-    * decision; this keeps both. */
-  def semStageFramed(vecs: DataFrame, idCol: String, vecCol: String,
-                     routing: FramedRouting): DataFrame =
-    stagedOf(framedAssignWithV(vecs, idCol, vecCol, routing))
-
-  /** Within-cluster exact-cosine near-dup pairs over the trained Lloyd
-    * cells — the candidate generator of SemDeDup (Abbas et al. 2023,
-    * arXiv:2303.09540): duplicates are only searched INSIDE a semantic
-    * cluster, so candidate volume is Σ|cell|² instead of n² (with k
-    * grown ∝ n, cell sizes — and the per-cell quadratic — stay
-    * bounded; the paper uses the same argument). Prefer staging once
-    * via [[semStage]] + [[pairsOf]] when the keep rule also needs the
-    * distances — this convenience form builds (and caches) the same
-    * staged frame.
-    */
-  def nearDupPairs(vecs: DataFrame, idCol: String, vecCol: String,
-                   model: KmeansModel, threshold: Double): DataFrame =
-    pairsOf(semStage(vecs, idCol, vecCol, model), threshold)
-
-  /** [[nearDupPairs]] over ROUTED cells — the large-k SemDeDup path.
-    * Within-cell search semantics are IDENTICAL — only cell membership
-    * can differ, and only for vectors whose true nearest centroid
-    * lives outside their routed super (the nProbe=1 trade): a near-dup
-    * pair is missed iff routing SPLITS it across cells where exact
-    * assignment co-located it. SCALECURVE §12 measures that recall on
-    * planted twins.
-    */
-  def nearDupPairsRouted(vecs: DataFrame, idCol: String, vecCol: String,
-                         routing: RoutingTable,
-                         threshold: Double): DataFrame =
-    pairsOf(semStageRouted(vecs, idCol, vecCol, routing), threshold)
-
-  /** [[nearDupPairsRouted]] with FRAME-RESIDENT member centroids — the
-    * full production composition: SemDeDup-regime k (∝ n) needs routed
-    * assignment for the flop count AND frame-resident centroids for
-    * the driver/plan ceiling; this is both. Cell membership is
-    * [[framedAssign]]'s decision — bit-equal to the literal routed
-    * path, so the pair set (and the demo's oracle) is IDENTICAL to
-    * the routed variant's.
-    */
-  def nearDupPairsFramed(vecs: DataFrame, idCol: String, vecCol: String,
-                         routing: FramedRouting,
-                         threshold: Double): DataFrame =
-    pairsOf(semStageFramed(vecs, idCol, vecCol, routing), threshold)
 
   /** The shared within-cluster pair tail over a staged frame
     * ([[semStage]] family — needs (id, v, nrm, cluster); extra columns

@@ -402,7 +402,7 @@ object TextDedup {
     val newBands = bandIndexFromShingles(newSh, k, bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     incrementalNearDupsIndexedStaged(newSh, newBands, histIndex, hist,
-      idCol, textCol, threshold, maxBucket)
+      idCol, textCol, threshold, maxBucket, shingleN)
   }
 
   /** [[incrementalNearDupsIndexed]] over a caller-staged batch:

@@ -296,8 +296,8 @@ object QuantEval {
   }
 
   /** [[nearestCentroids]] with the centroid table coming from DATA —
-    * the three-level multi-probe MID routing (Kmeans.framedAssign3 at
-    * nProbe ≥ 2): `marr` is an array of (id int, cv array&lt;double&gt;)
+    * the three-level multi-probe MID routing (Kmeans.Assigner.Routed3):
+    * `marr` is an array of (id int, cv array&lt;double&gt;)
     * structs sorted by id (position tie = id tie, the
     * [[nearestCentroidVar]] contract). Same shared [[l2sq]] fold, same
     * Double.compare total order, same position-tie rule; `take = 1`
@@ -507,7 +507,7 @@ object NearestCentroid {
 }
 
 /** [[NearestCentroid]] with the centroid table from a COLUMN — the
-  * frame-resident assignment kernel (Kmeans.framedAssign): the member
+  * frame-resident assignment kernel (Kmeans.Assigner.Routed): the member
   * table arrives via a 1:1 join as an array of (cluster, cv) structs,
   * and the argmin is ONE generated static call per row. The composed
   * `aggregate(slice(...), ...)` HOF form was semantically identical
@@ -555,7 +555,7 @@ object NearestCentroidIn {
 }
 
 /** Top-`take` centroid ids by (squared L2 asc, id asc) — the multi-probe
-  * routing kernel (Kmeans.routedAssign at nProbe ≥ 2): the IVF nProbe
+  * routing kernel (Kmeans.Assigner.Routed / Routed3): the IVF nProbe
   * idea applied to the L2 metric with [[NearestCentroid]]'s exact
   * distance fold and tie order, so `take = 1` is bit-equal to
   * `array(nearest_centroid(v).cluster)`. Returns min(take, k) ids.
@@ -609,8 +609,8 @@ object NearestCentroids {
 }
 
 /** [[NearestCentroids]] with the centroid table from a COLUMN — the
-  * frame-resident multi-probe kernel (Kmeans.framedAssign3 at
-  * nProbe ≥ 2 probes each routed super's MID table, which arrives via
+  * frame-resident multi-probe kernel (Kmeans.Assigner.Routed3 probes
+  * each routed super's MID table, which arrives via
   * a 1:1 join as an array of (mid, mcv) structs). Bit parity triangle:
   * `take = 1` equals `[NearestCentroidIn(...).cluster]`, and against
   * [[NearestCentroids]] it is the same shared fold/order/tie semantics

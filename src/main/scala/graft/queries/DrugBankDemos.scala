@@ -117,19 +117,14 @@ object DrugBankDemos {
   val queries: Map[String, Q] = Map(
     "drugbank_e2e" -> ((s, dir) => {
       import s.implicits._
-      def t[T](l: String)(f: => T): T =
-        if (sys.env.contains("GRAFT_PROFILE")) {
-          val t0 = System.nanoTime(); val r = f
-          println(f"[build] $l: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-        } else f
-      val (nodes, clusters) = t("kg")(kg(s, dir))
+      val (nodes, clusters) = kg(s, dir)
       val edges = Seq.empty[(String, String, String, String, String, String)]
         .toDF("id", "subject", "predicate", "object",
               "upstream_resource_id", "primary_knowledge_source")
-      val syn = t("syn")(new Synonymizer(nodes, clusters, edges))
-      val s1 = t("stage1")(
-        Stage1.run(drugs(s, dir), syn, new DictionaryNer(nodes, clusters)))
-      val s2 = t("stage2")(Stage2.run(s1, new IdentifierAlignment(syn)))
+      val syn = new Synonymizer(nodes, clusters, edges)
+      val s1 =
+        Stage1.run(drugs(s, dir), syn, new DictionaryNer(nodes, clusters))
+      val s2 = Stage2.run(s1, new IdentifierAlignment(syn))
       // ONE flatten pass (r19): the rec row and both exploded maps emit
       // from a single concat'd array per record — the old three-branch
       // union read the (persisted) stage-2 frame three times; this scan

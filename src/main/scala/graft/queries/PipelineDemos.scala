@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.extensions.{Components, CorpusClean, Multimodal, Pq, Similarity, TextAnalysis, TextDedup}
+import graft.extensions.{Components, CorpusClean, Kmeans, Multimodal, Pq, Similarity, TextAnalysis, TextDedup}
 import graft.tables.Tables
 
 /** Training-data pipeline demos over `documents` / `embeddings`:
@@ -53,33 +53,23 @@ object PipelineDemos {
   private val pqIndexCache = new graft.tables.CorpusMemo[Pq.PqIndex]("embeddings")
 
   private val kmeansCache =
-    new graft.tables.CorpusMemo[graft.extensions.Kmeans.KmeansModel](
-      "embeddings")
-
-  // routing structures are a pure function of the model — memoized so
-  // registry re-executions don't re-run the k-row super training
-  private val kmeansRoutingCache =
-    new graft.tables.CorpusMemo[graft.extensions.Kmeans.RoutingTable](
-      "embeddings")
+    new graft.tables.CorpusMemo[Kmeans.KmeansModel]("embeddings")
 
   // frame-resident routing (kmeans_assign_framed): holds a member
   // DataFrame, so reuse is gated on the session still being the one
   // that built it (the getOrElseValid stance for session-scoped state)
   private val kmeansFramedRoutingCache =
-    new graft.tables.CorpusMemo[graft.extensions.Kmeans.FramedRouting](
-      "embeddings")
+    new graft.tables.CorpusMemo[Kmeans.FramedRouting]("embeddings")
 
   // three-level frame-resident routing (kmeans_assign_framed3) —
   // session-gated like the two-level framed cache
   private val kmeansFramed3RoutingCache =
-    new graft.tables.CorpusMemo[graft.extensions.Kmeans.FramedRouting3](
-      "embeddings")
+    new graft.tables.CorpusMemo[Kmeans.FramedRouting3]("embeddings")
 
   // the early-stopped trajectory (kmeans_earlystop): its own model —
   // different rounds than the shared kmeansCache fixture
   private val kmeansEarlystopCache =
-    new graft.tables.CorpusMemo[graft.extensions.Kmeans.KmeansModel](
-      "embeddings")
+    new graft.tables.CorpusMemo[Kmeans.KmeansModel]("embeddings")
 
   // landed framed-training centroid parquet per corpus stamp
   // (kmeans_framed_train): the training artifact, written once
@@ -96,8 +86,7 @@ object PipelineDemos {
   // 3/4 split, the ann_ivf_incremental convention); shared with the
   // streaming ingest demo
   private[queries] val kmeansHistCache =
-    new graft.tables.CorpusMemo[graft.extensions.Kmeans.KmeansModel](
-      "embeddings")
+    new graft.tables.CorpusMemo[Kmeans.KmeansModel]("embeddings")
 
   // the trained BPE merge list (driver rows, engine-independent) —
   // shared by bpe_merges and bpe_encode_stats so the 3-pass induction
@@ -259,6 +248,59 @@ object PipelineDemos {
   // stamp (pipeline_hits_gate)
   private val hitsJoinedPathCache =
     new graft.tables.CorpusMemo[String]("documents")
+
+  /** The shared k=8, 3-round Lloyd fixture behind every kmeans_* and
+    * semdedup_* demo. */
+  private def kmeansModel(s: SparkSession, dir: String): Kmeans.KmeansModel =
+    kmeansCache.getOrElseUpdate(dir,
+      Kmeans.lloyd(Tables.embeddings(s, dir), "vec_id", "embedding",
+        k = 8, rounds = 3))
+
+  /** Two-level frame-resident routing over the fixture (3 supers). It
+    * holds a member DataFrame, so reuse is gated on the session still
+    * being the one that built it. */
+  private def framedRouting(s: SparkSession,
+                            dir: String): Kmeans.FramedRouting =
+    kmeansFramedRoutingCache.getOrElseValid(dir,
+        _.members.sparkSession eq s)(
+      Kmeans.framedRoutingFor(
+        Kmeans.lastCentroidsFrame(s, kmeansModel(s, dir)),
+        "cluster", "cv", nSupers = 3))
+
+  /** Three-level routing over the fixture (2 supers × 2 mids). */
+  private def framedRouting3(s: SparkSession,
+                             dir: String): Kmeans.FramedRouting3 =
+    kmeansFramed3RoutingCache.getOrElseValid(dir,
+        _.members.sparkSession eq s)(
+      Kmeans.framedRoutingFor3(
+        Kmeans.lastCentroidsFrame(s, kmeansModel(s, dir)),
+        "cluster", "cv", nSupers = 2, nMids = 2))
+
+  /** An assignment demo: (vec_id, cluster, dq[, super[, mid]]). */
+  private def kmeansAssignDemo(
+      by: (SparkSession, String) => Kmeans.Assigner): Q = (s, dir) =>
+    Kmeans.assign(Tables.embeddings(s, dir), "vec_id", "embedding",
+        by(s, dir))
+      .withColumnRenamed("id", "vec_id")
+      .orderBy("vec_id")
+
+  /** A SemDeDup prune demo: ONE staged assignment scan (VERDICT r16
+    * #2) — the persisted (id, v, nrm, cluster, dq) frame feeds both the
+    * within-cell pair search and the farthest-from-centroid keep
+    * distances. */
+  private def semdedupPruneDemo(
+      by: (SparkSession, String) => Kmeans.Assigner): Q = (s, dir) => {
+    val staged = Kmeans.semStage(Tables.embeddings(s, dir), "vec_id",
+      "embedding", by(s, dir))
+    val pairs = Kmeans.pairsOf(staged, cosineThreshold)
+    val comps = Components.connectedComponents(pairs, "id_a", "id_b")
+    comps.join(staged.select(col("id"), col("dq")), "id")
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("comp").orderBy(col("dq").desc, col("id"))))
+      .select(col("id").as("vec_id"), col("comp"), col("dq"),
+              (col("rn") === 1).as("keep"))
+      .orderBy("vec_id")
+  }
 
   val queries: Map[String, Q] = Map(
     // Language ID: stopword-evidence argmax.
@@ -988,111 +1030,47 @@ object PipelineDemos {
     // the smaller cluster, fixed-point centroid updates. Per round:
     // ONE map-side assignment (centroids ride as literals) + ONE
     // k·d-key map-side-combined shuffle. The model is memoized per
-    // corpus (training is an offline step, shared by the three
-    // kmeans_* demos).
-    "kmeans_centroids" -> ((s, dir) => {
-      val m = kmeansCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(Tables.embeddings(s, dir),
-          "vec_id", "embedding", k = 8, rounds = 3))
-      graft.extensions.Kmeans.centroidFrame(s, m)
-        .orderBy("round", "cluster", "pos")
-    }),
+    // corpus (training is an offline step, shared by every kmeans_* and
+    // semdedup_* demo).
+    "kmeans_centroids" -> ((s, dir) =>
+      Kmeans.centroidFrame(s, kmeansModel(s, dir))
+        .orderBy("round", "cluster", "pos")),
     // The k-means convergence curve: Σ floor(min-dist·1e6) per round —
     // exact longs, so the (monotone) inertia trajectory is
     // engine-comparable.
-    "kmeans_inertia" -> ((s, dir) => {
-      val m = kmeansCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(Tables.embeddings(s, dir),
-          "vec_id", "embedding", k = 8, rounds = 3))
-      graft.extensions.Kmeans.inertiaFrame(s, m).orderBy("round")
-    }),
+    "kmeans_inertia" -> ((s, dir) =>
+      Kmeans.inertiaFrame(s, kmeansModel(s, dir)).orderBy("round")),
     // Final cluster assignment under the trained model — the SemDeDup /
     // curriculum-grouping primitive: one map-side pass per vector,
     // quantized distance for engine-exact output.
-    "kmeans_assign" -> ((s, dir) => {
-      val m = kmeansCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(Tables.embeddings(s, dir),
-          "vec_id", "embedding", k = 8, rounds = 3))
-      graft.extensions.Kmeans.assign(Tables.embeddings(s, dir),
-          "vec_id", "embedding", m)
-        .withColumnRenamed("id", "vec_id")
-        .orderBy("vec_id")
-    }),
+    "kmeans_assign" -> kmeansAssignDemo((s, dir) =>
+      Kmeans.Assigner.Exact(kmeansModel(s, dir))),
     // Two-level ROUTED assignment — the large-k scale path (route via
     // √k super-centroids trained on the centroid table itself, then
     // argmin within the routed super's members: ~n·2√k·d flops instead
-    // of n·k·d). The approximation (nProbe=1 over supers) and every
-    // tie are deterministic, so the oracle replays the whole two-level
-    // decision bit-for-bit.
-    "kmeans_assign_routed" -> ((s, dir) => {
-      val m = kmeansCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(Tables.embeddings(s, dir),
-          "vec_id", "embedding", k = 8, rounds = 3))
-      val routing = kmeansRoutingCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.routingFor(s, m, nSupers = 3))
-      graft.extensions.Kmeans.routedAssign(Tables.embeddings(s, dir),
-          "vec_id", "embedding", routing)
-        .withColumnRenamed("id", "vec_id")
-        .orderBy("vec_id")
-    }),
+    // of n·k·d). Only the √k super centroids ride the plan as literals;
+    // the k member centroids live in a (super, cluster, cv) DataFrame
+    // and assignment is route → equi-join on super → per-vector argmin.
+    // The approximation (nProbe=1 over supers) and every tie are
+    // deterministic, so the oracle replays the whole two-level decision
+    // bit-for-bit. `kmeans_assign_routed` is the same decision under
+    // its original registry name.
+    "kmeans_assign_framed" -> kmeansAssignDemo((s, dir) =>
+      Kmeans.Assigner.Routed(framedRouting(s, dir))),
+    "kmeans_assign_routed" -> kmeansAssignDemo((s, dir) =>
+      Kmeans.Assigner.Routed(framedRouting(s, dir))),
     // MULTI-PROBE routed assignment (nProbe=2): the IVF answer to the
     // nProbe=1 quality trade — each vector probes its TWO nearest
     // supers and argmins over both member sets, recovering exactly the
     // vectors whose true nearest centroid lives in the second-nearest
-    // super. Same deterministic folds and tie orders, so the oracle
-    // replays the widened decision (top-2 supers by the same window
-    // order, then one argmin over the joined members).
-    "kmeans_assign_routed2" -> ((s, dir) => {
-      val m = kmeansCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(Tables.embeddings(s, dir),
-          "vec_id", "embedding", k = 8, rounds = 3))
-      val routing = kmeansRoutingCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.routingFor(s, m, nSupers = 3))
-      graft.extensions.Kmeans.routedAssign(Tables.embeddings(s, dir),
-          "vec_id", "embedding", routing, nProbe = 2)
-        .withColumnRenamed("id", "vec_id")
-        .orderBy("vec_id")
-    }),
-    // FRAME-RESIDENT routed assignment — the production-k path (VERDICT
-    // r15 #1): only the √k super centroids ride the plan as literals;
-    // the k member centroids live in a (super, cluster, cv) DataFrame
-    // and assignment is route → equi-join on super → per-vector argmin,
-    // killing the k·d driver collect / plan-literal ceiling. The
-    // decision is bit-equal to kmeans_assign_routed on the same model
-    // (ExtensionsSpec pins it), so it shares that demo's oracle.
-    "kmeans_assign_framed" -> ((s, dir) => {
-      val m = kmeansCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(Tables.embeddings(s, dir),
-          "vec_id", "embedding", k = 8, rounds = 3))
-      val routing = kmeansFramedRoutingCache.getOrElseValid(dir,
-          _.members.sparkSession eq s)(
-        graft.extensions.Kmeans.framedRoutingFor(
-          graft.extensions.Kmeans.lastCentroidsFrame(s, m),
-          "cluster", "cv", nSupers = 3))
-      graft.extensions.Kmeans.framedAssign(Tables.embeddings(s, dir),
-          "vec_id", "embedding", routing)
-        .withColumnRenamed("id", "vec_id")
-        .orderBy("vec_id")
-    }),
-    // The framed × multi-probe composition: nProbe=2 quality recovery
-    // with frame-resident member centroids — each probe slot is one
-    // more 1:1 join + map-side fold, the cross-slot decision a
-    // map-side least; n rows end to end. Bit-equal to the literal
-    // kmeans_assign_routed2 (ExtensionsSpec), so it shares its oracle.
-    "kmeans_assign_framed2" -> ((s, dir) => {
-      val m = kmeansCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(Tables.embeddings(s, dir),
-          "vec_id", "embedding", k = 8, rounds = 3))
-      val routing = kmeansFramedRoutingCache.getOrElseValid(dir,
-          _.members.sparkSession eq s)(
-        graft.extensions.Kmeans.framedRoutingFor(
-          graft.extensions.Kmeans.lastCentroidsFrame(s, m),
-          "cluster", "cv", nSupers = 3))
-      graft.extensions.Kmeans.framedAssign(Tables.embeddings(s, dir),
-          "vec_id", "embedding", routing, nProbe = 2)
-        .withColumnRenamed("id", "vec_id")
-        .orderBy("vec_id")
-    }),
+    // super. Each probe slot is one more 1:1 join + map-side fold, the
+    // cross-slot decision a map-side least; n rows end to end. The
+    // oracle replays the widened decision (top-2 supers by the same
+    // window order, then one argmin over the joined members).
+    "kmeans_assign_framed2" -> kmeansAssignDemo((s, dir) =>
+      Kmeans.Assigner.Routed(framedRouting(s, dir), nProbe = 2)),
+    "kmeans_assign_routed2" -> kmeansAssignDemo((s, dir) =>
+      Kmeans.Assigner.Routed(framedRouting(s, dir), nProbe = 2)),
     // THREE-LEVEL frame-resident assignment (VERDICT r16 #2): the
     // two-level member-array rows are k/√k·d — ~9 MB at the SemDeDup
     // regime (k≈2M, d=768). A MID level (anchored on the nMids
@@ -1102,20 +1080,8 @@ object PipelineDemos {
     // literal super route → mid-array join + map-side argmin →
     // leaf-array join + map-side argmin, n rows end to end. Fully
     // deterministic, so the oracle replays all three levels.
-    "kmeans_assign_framed3" -> ((s, dir) => {
-      val m = kmeansCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(Tables.embeddings(s, dir),
-          "vec_id", "embedding", k = 8, rounds = 3))
-      val routing = kmeansFramed3RoutingCache.getOrElseValid(dir,
-          _.members.sparkSession eq s)(
-        graft.extensions.Kmeans.framedRoutingFor3(
-          graft.extensions.Kmeans.lastCentroidsFrame(s, m),
-          "cluster", "cv", nSupers = 2, nMids = 2))
-      graft.extensions.Kmeans.framedAssign3(Tables.embeddings(s, dir),
-          "vec_id", "embedding", routing)
-        .withColumnRenamed("id", "vec_id")
-        .orderBy("vec_id")
-    }),
+    "kmeans_assign_framed3" -> kmeansAssignDemo((s, dir) =>
+      Kmeans.Assigner.Routed3(framedRouting3(s, dir))),
     // MULTI-PROBE three-level assignment (VERDICT r17 #3): the
     // framed2 quality-recovery knob on the deepest path — nProbe=2
     // supers from the literal kernel, 2 mids per probed super from
@@ -1123,44 +1089,27 @@ object PipelineDemos {
     // joins, map-side least by (d, cluster). The oracle replays the
     // whole composition (top-2 supers, top-2 mids per super, one
     // argmin over the joined leaf members).
-    "kmeans_assign_framed3p2" -> ((s, dir) => {
-      val m = kmeansCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(Tables.embeddings(s, dir),
-          "vec_id", "embedding", k = 8, rounds = 3))
-      val routing = kmeansFramed3RoutingCache.getOrElseValid(dir,
-          _.members.sparkSession eq s)(
-        graft.extensions.Kmeans.framedRoutingFor3(
-          graft.extensions.Kmeans.lastCentroidsFrame(s, m),
-          "cluster", "cv", nSupers = 2, nMids = 2))
-      graft.extensions.Kmeans.framedAssign3(Tables.embeddings(s, dir),
-          "vec_id", "embedding", routing, nProbe = 2)
-        .withColumnRenamed("id", "vec_id")
-        .orderBy("vec_id")
-    }),
+    "kmeans_assign_framed3p2" -> kmeansAssignDemo((s, dir) =>
+      Kmeans.Assigner.Routed3(framedRouting3(s, dir), nProbe = 2)),
     // FRAME-RESIDENT Lloyd TRAINING under the exact oracle: lloydFramed
     // at nSupers=1 routes every vector through one all-members super,
     // so assignment degenerates to the exact argmin and the trained
-    // centroid frame must equal lloyd's final round bit-for-bit — the
+    // state frame must equal lloyd's final round bit-for-bit — the
     // oracle is the plain Lloyd chain's round-3 fixed-point sums. The
     // driver never holds the k·d centroid state during training (the
-    // trajectory lives in (cluster, cv) frames); the landed parquet is
-    // the once-per-corpus training artifact the assign demos would
-    // consume at production k.
+    // trajectory lives in frames); the landed parquet is the
+    // once-per-corpus training artifact the assign demos would consume
+    // at production k.
     "kmeans_framed_train" -> ((s, dir) => {
       val p = kmeansFramedTrainPathCache.getOrElseUpdate(dir, {
         val path = graft.tables.ScratchDirs.tmp("kmftrain", dir)
-        val f = graft.extensions.Kmeans.lloydFramed(
-          Tables.embeddings(s, dir), "vec_id", "embedding",
-          k = 8, rounds = 3, nSupers = 1)
-        f.write.mode("overwrite").parquet(path)
+        val f = Kmeans.lloydFramed(Tables.embeddings(s, dir), "vec_id",
+          "embedding", k = 8, rounds = 3, nSupers = 1)
+        f.select("cluster", "pos", "c").write.mode("overwrite").parquet(path)
         f.unpersist(false)
         path
       })
-      s.read.parquet(p)
-        .select(col("cluster"), posexplode(col("cv")).as(Seq("pos", "c")))
-        .select(col("cluster"), col("pos").cast("long").as("pos"),
-                col("c"))
-        .orderBy("cluster", "pos")
+      s.read.parquet(p).orderBy("cluster", "pos")
     }),
     // Lloyd with EXACT convergence early-stop: train to maxRounds=6 but
     // stop once the quantized-inertia improvement drops to ≤ 2e6 quanta
@@ -1172,10 +1121,9 @@ object PipelineDemos {
     // assignment pass + k·d shuffle that never runs.
     "kmeans_earlystop" -> ((s, dir) => {
       val m = kmeansEarlystopCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(Tables.embeddings(s, dir),
-          "vec_id", "embedding", k = 8, rounds = 6,
-          tolQ = earlystopTolQ))
-      graft.extensions.Kmeans.inertiaFrame(s, m).orderBy("round")
+        Kmeans.lloyd(Tables.embeddings(s, dir), "vec_id", "embedding",
+          k = 8, rounds = 6, tolQ = earlystopTolQ))
+      Kmeans.inertiaFrame(s, m).orderBy("round")
     }),
     // Incremental (online) k-means: the model FROZEN on the historical
     // 3/4 of the corpus folds the remaining 1/4 in as a batch — batch
@@ -1188,11 +1136,8 @@ object PipelineDemos {
       val hist = e.filter(pmod(col("vec_id"), lit(4L)) < 3L)
       val batch = e.filter(pmod(col("vec_id"), lit(4L)) === 3L)
       val m = kmeansHistCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(hist, "vec_id", "embedding",
-          k = 8, rounds = 3))
-      graft.extensions.Kmeans.sumsFrame(s,
-          graft.extensions.Kmeans.incrementalUpdate(m, batch,
-            "embedding"))
+        Kmeans.lloyd(hist, "vec_id", "embedding", k = 8, rounds = 3))
+      Kmeans.sumsFrame(s, Kmeans.incrementalUpdate(m, batch, "embedding"))
         .orderBy("cluster", "pos")
     }),
     // FRAME-RESIDENT incremental k-means (the online face of the
@@ -1208,11 +1153,9 @@ object PipelineDemos {
       val hist = e.filter(pmod(col("vec_id"), lit(4L)) < 3L)
       val batch = e.filter(pmod(col("vec_id"), lit(4L)) === 3L)
       val m = kmeansHistCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(hist, "vec_id", "embedding",
-          k = 8, rounds = 3))
-      graft.extensions.Kmeans.incrementalUpdateFramed(
-          graft.extensions.Kmeans.stateFrame(s, m)
-            .select("cluster", "pos", "sq", "n"),
+        Kmeans.lloyd(hist, "vec_id", "embedding", k = 8, rounds = 3))
+      Kmeans.incrementalUpdateFramed(
+          Kmeans.stateFrame(s, m).select("cluster", "pos", "sq", "n"),
           batch, "embedding", nSupers = 1)
         .select("cluster", "pos", "c", "n")
         .orderBy("cluster", "pos")
@@ -1224,118 +1167,30 @@ object PipelineDemos {
     // (max quantized distance, ties to the smaller id), preserving
     // diversity. Singletons (no near-dup) never enter the pair graph
     // and are implicitly kept.
-    "semdedup_prune" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val m = kmeansCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(Tables.embeddings(s, dir),
-          "vec_id", "embedding", k = 8, rounds = 3))
-      val e = Tables.embeddings(s, dir)
-      // ONE staged assignment scan (VERDICT r16 #2): the persisted
-      // (id, v, nrm, cluster, dq) frame feeds both the within-cell
-      // pair search and the farthest-from-centroid keep distances —
-      // the demos used to re-assign the corpus just to recover dq.
-      val staged = graft.extensions.Kmeans.semStage(
-        e, "vec_id", "embedding", m)
-      val pairs = graft.extensions.Kmeans.pairsOf(staged, cosineThreshold)
-      val comps = Components.connectedComponents(pairs, "id_a", "id_b")
-      val dists = staged.select(col("id"), col("dq"))
-      comps.join(dists, "id")
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("comp")
-            .orderBy(col("dq").desc, col("id"))))
-        .select(col("id").as("vec_id"), col("comp"), col("dq"),
-                (col("rn") === 1).as("keep"))
-        .orderBy("vec_id")
-    }),
+    "semdedup_prune" -> semdedupPruneDemo((s, dir) =>
+      Kmeans.Assigner.Exact(kmeansModel(s, dir))),
     // SemDeDup over ROUTED cells (VERDICT r15 #2) — the large-k prune
     // pipeline end-to-end: at the paper's regime (k ∝ n for fixed cell
     // size) exact assignment is the n·k·d wall, so cell membership —
     // for BOTH the pair search and the farthest-keep distances — comes
-    // from the two-level routed decision (~n·2√k·d). Within-cell
-    // semantics identical to semdedup_prune; a pair is lost only when
-    // routing SPLITS it across cells (the nProbe=1 trade, recall
-    // measured in SCALECURVE §12). Fully deterministic, so the oracle
-    // replays routing, pairs, closure, and keep rule end-to-end.
-    "semdedup_prune_routed" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val m = kmeansCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(Tables.embeddings(s, dir),
-          "vec_id", "embedding", k = 8, rounds = 3))
-      val routing = kmeansRoutingCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.routingFor(s, m, nSupers = 3))
-      val e = Tables.embeddings(s, dir)
-      // one staged routed-assignment scan for pairs AND keep distances
-      val staged = graft.extensions.Kmeans.semStageRouted(
-        e, "vec_id", "embedding", routing)
-      val pairs = graft.extensions.Kmeans.pairsOf(staged, cosineThreshold)
-      val comps = Components.connectedComponents(pairs, "id_a", "id_b")
-      val dists = staged.select(col("id"), col("dq"))
-      comps.join(dists, "id")
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("comp")
-            .orderBy(col("dq").desc, col("id"))))
-        .select(col("id").as("vec_id"), col("comp"), col("dq"),
-                (col("rn") === 1).as("keep"))
-        .orderBy("vec_id")
-    }),
-    // The FULL production SemDeDup composition: routed flop count AND
-    // frame-resident centroids — cell membership and keep-rule
-    // distances both come from framedAssign. Bit-equal to the routed
-    // variant by the framed-parity pin, so it shares its oracle.
-    "semdedup_prune_framed" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val m = kmeansCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(Tables.embeddings(s, dir),
-          "vec_id", "embedding", k = 8, rounds = 3))
-      val routing = kmeansFramedRoutingCache.getOrElseValid(dir,
-          _.members.sparkSession eq s)(
-        graft.extensions.Kmeans.framedRoutingFor(
-          graft.extensions.Kmeans.lastCentroidsFrame(s, m),
-          "cluster", "cv", nSupers = 3))
-      val e = Tables.embeddings(s, dir)
-      // one staged framed-assignment scan for pairs AND keep distances
-      val staged = graft.extensions.Kmeans.semStageFramed(
-        e, "vec_id", "embedding", routing)
-      val pairs = graft.extensions.Kmeans.pairsOf(staged, cosineThreshold)
-      val comps = Components.connectedComponents(pairs, "id_a", "id_b")
-      val dists = staged.select(col("id"), col("dq"))
-      comps.join(dists, "id")
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("comp")
-            .orderBy(col("dq").desc, col("id"))))
-        .select(col("id").as("vec_id"), col("comp"), col("dq"),
-                (col("rn") === 1).as("keep"))
-        .orderBy("vec_id")
-    }),
+    // from the two-level routed decision (~n·2√k·d) with frame-resident
+    // member centroids. Within-cell semantics identical to
+    // semdedup_prune; a pair is lost only when routing SPLITS it across
+    // cells (the nProbe=1 trade, recall measured in SCALECURVE §12).
+    // Fully deterministic, so the oracle replays routing, pairs,
+    // closure, and keep rule end-to-end. `semdedup_prune_routed` is the
+    // same pipeline under its original registry name.
+    "semdedup_prune_framed" -> semdedupPruneDemo((s, dir) =>
+      Kmeans.Assigner.Routed(framedRouting(s, dir))),
+    "semdedup_prune_routed" -> semdedupPruneDemo((s, dir) =>
+      Kmeans.Assigner.Routed(framedRouting(s, dir))),
     // The DEEPEST production SemDeDup composition: routed flop count +
     // frame-resident centroids + THREE-LEVEL bounded member-array rows
-    // — cell membership and keep distances both from framedAssign3's
+    // — cell membership and keep distances both from the three-level
     // staged single scan. Fully deterministic; the oracle replays the
     // three-level routing, staging, pairs, closure, and keep rule.
-    "semdedup_prune_framed3" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val m = kmeansCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(Tables.embeddings(s, dir),
-          "vec_id", "embedding", k = 8, rounds = 3))
-      val routing = kmeansFramed3RoutingCache.getOrElseValid(dir,
-          _.members.sparkSession eq s)(
-        graft.extensions.Kmeans.framedRoutingFor3(
-          graft.extensions.Kmeans.lastCentroidsFrame(s, m),
-          "cluster", "cv", nSupers = 2, nMids = 2))
-      val e = Tables.embeddings(s, dir)
-      val staged = graft.extensions.Kmeans.semStageFramed3(
-        e, "vec_id", "embedding", routing)
-      val pairs = graft.extensions.Kmeans.pairsOf(staged, cosineThreshold)
-      val comps = Components.connectedComponents(pairs, "id_a", "id_b")
-      val dists = staged.select(col("id"), col("dq"))
-      comps.join(dists, "id")
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("comp")
-            .orderBy(col("dq").desc, col("id"))))
-        .select(col("id").as("vec_id"), col("comp"), col("dq"),
-                (col("rn") === 1).as("keep"))
-        .orderBy("vec_id")
-    }),
+    "semdedup_prune_framed3" -> semdedupPruneDemo((s, dir) =>
+      Kmeans.Assigner.Routed3(framedRouting3(s, dir))),
     // k-NN classification: 3 nearest cosine neighbors vote; majority
     // with ties to the smaller label. Queries (vec_id < 20) classify
     // against the rest of the corpus.
@@ -2728,7 +2583,7 @@ object PipelineDemos {
        |  ORDER BY d, cluster) = 1
        |ORDER BY vec_id""".stripMargin
 
-  /** Routed-assignment oracle (extensions.Kmeans.routedAssign): one
+  /** Routed-assignment oracle (extensions.Kmeans.Assigner.Routed): one
     * Lloyd round over the k centroid rows (same fixed-point
     * arithmetic, init = the nSupers smallest cluster ids), membership
     * under the updated supers, routing restricted to populated supers,
@@ -2816,8 +2671,8 @@ object PipelineDemos {
        |  ORDER BY d, cluster) = 1
        |ORDER BY vec_id""".stripMargin
 
-  /** Three-level framed-assignment oracle (extensions.Kmeans
-    * .framedAssign3): the two-level routing CTEs (super training,
+  /** Three-level framed-assignment oracle (extensions.Kmeans.Assigner
+    * .Routed3): the two-level routing CTEs (super training,
     * membership, populated supers, per-vector super route `rv`), then
     * the MID level replayed one step down — anchors = the nMids
     * smallest cluster ids per super (mid = positional id in cluster
@@ -2839,7 +2694,7 @@ object PipelineDemos {
        |ORDER BY vec_id""".stripMargin
 
   /** Multi-probe three-level assignment oracle (extensions.Kmeans
-    * .framedAssign3 at nProbe ≥ 2): the framed3 routing CTEs, then the
+    * .Assigner.Routed3 at nProbe ≥ 2): the framed3 routing CTEs, then the
     * probed replay — each vector's top-nProbe supers (same window
     * order as [[kmeansRouted2Oracle]]'s rv2), each (vector, probed
     * super)'s top-nProbe mids, and ONE argmin by (d, cluster) over the

@@ -237,7 +237,7 @@ object StreamingDemos {
         .orderBy("batch", "cluster", "pos")
     }),
     // FRAME-RESIDENT streaming online k-means: the whole lineage —
-    // offline training (lloydFramedState), the landed state artifact,
+    // offline training (lloydFramed), the landed state artifact,
     // and every micro-batch update (incrementalUpdateFramed) — runs
     // without EVER collecting k·d rows to the driver (the driver-state
     // variant above reads its state back with a per-batch collect).
@@ -248,7 +248,7 @@ object StreamingDemos {
       val e = Tables.embeddings(s, dir)
       val state0 = kmeansState0PathCache.getOrElseUpdate(dir, {
         val path = graft.tables.ScratchDirs.tmp("kmstate0", dir)
-        val st = graft.extensions.Kmeans.lloydFramedState(
+        val st = graft.extensions.Kmeans.lloydFramed(
           e.filter(pmod(col("vec_id"), lit(4L)) < 3L),
           "vec_id", "embedding", k = 8, rounds = 3, nSupers = 1)
         st.write.mode("overwrite").parquet(path)
@@ -291,8 +291,8 @@ object StreamingDemos {
           "cluster", "cv", nSupers = 3))
       val stage0 = semdedupStage0PathCache.getOrElseUpdate(dir, {
         val path = graft.tables.ScratchDirs.tmp("sdstage0", dir)
-        val st = graft.extensions.Kmeans.semStageFramed(
-          hist, "vec_id", "embedding", routing)
+        val st = graft.extensions.Kmeans.semStage(hist, "vec_id",
+          "embedding", graft.extensions.Kmeans.Assigner.Routed(routing))
         st.write.mode("overwrite").parquet(path)
         st.unpersist(false)
         path
@@ -334,8 +334,8 @@ object StreamingDemos {
           "cluster", "cv", nSupers = 2, nMids = 2))
       val stage0 = semdedupStage30PathCache.getOrElseUpdate(dir, {
         val path = graft.tables.ScratchDirs.tmp("sd3stage0", dir)
-        val st = graft.extensions.Kmeans.semStageFramed3(
-          hist, "vec_id", "embedding", routing)
+        val st = graft.extensions.Kmeans.semStage(hist, "vec_id",
+          "embedding", graft.extensions.Kmeans.Assigner.Routed3(routing))
         st.write.mode("overwrite").parquet(path)
         st.unpersist(false)
         path

@@ -149,21 +149,22 @@ object DocsStream {
     // three actions follow (flags + bands + history writes): persist so
     // the micro-batch source is not fetched once per sink
     batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // ONE staged shingle/band pair per micro-batch, shared by BOTH the
+    // flag join and the band-index sink (r20, VERDICT r19 #3:
+    // previously the sink called bandIndexOf separately and relied on
+    // CacheManager plan-dedup to collapse it onto the flag path's
+    // cached frames — explicit sharing, and on batch 0, where the flag
+    // path never ran, it saves the sink's own shingle pass
+    // recomputation outright). Released with the batch once the three
+    // sinks have landed — together with the candidate pairs the staged
+    // flagger persisted on top of them: every micro-batch stages new
+    // frames, so session-lifetime caches would grow with the stream.
+    import graft.extensions.TextDedup
+    val newSh = TextDedup.withShingles(batch, "doc_id", "text")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val newBands = TextDedup.bandIndexFromShingles(newSh)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // ONE staged shingle/band pair per micro-batch, shared by BOTH
-      // the flag join and the band-index sink (r20, VERDICT r19 #3:
-      // previously the sink called bandIndexOf separately and relied on
-      // CacheManager plan-dedup to collapse it onto the flag path's
-      // cached frames — explicit sharing, and on batch 0, where the
-      // flag path never ran, it saves the sink's own shingle pass
-      // recomputation outright). Session-persisted like the frames the
-      // staged flagger owns — CacheManager dedups re-executions over
-      // the same batch plan.
-      import graft.extensions.TextDedup
-      val newSh = TextDedup.withShingles(batch, "doc_id", "text")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val newBands = TextDedup.bandIndexFromShingles(newSh)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // read-back schemas are KNOWN (the history/band dirs hold exactly
       // what this body wrote on earlier batches — the same stream's row
       // shape): declaring them skips one parquet footer-inference job
@@ -193,7 +194,10 @@ object DocsStream {
       newBands.select(col("id").as("doc_id"), col("band"))
         .write.mode("overwrite").parquet(s"$bandsDir/batch=$batchId")
       batch.write.mode("overwrite").parquet(s"$histDir/batch=$batchId")
-    } finally batch.unpersist()
+    } finally {
+      org.apache.spark.sql.GraftBridge.uncacheCascade(newSh)
+      batch.unpersist()
+    }
     ()
   }
 

@@ -119,10 +119,10 @@ object VecsStream {
     * the k·d driver state removed: per batch the previous state reads
     * back as a FRAME (never `.collect()`ed — [[kmeansIngestBatch]]
     * collects k·d rows every batch, the same ceiling
-    * `Kmeans.framedAssign` removes from assignment), the update is
+    * `Kmeans.Assigner.Routed` removes from assignment), the update is
     * `Kmeans.incrementalUpdateFramed`, and the merged state lands
     * batch-addressed. `state0Dir` is the landed offline training
-    * artifact (a [[Kmeans.lloydFramedState]] or [[Kmeans.stateFrame]]
+    * artifact (a [[Kmeans.lloydFramed]] or [[Kmeans.stateFrame]]
     * parquet) — so training → landing → streaming updates never hold
     * k·d rows on the driver at any step. Exactly-once by the same
     * argument as [[kmeansIngest]]: state b is a pure function of the
@@ -142,7 +142,7 @@ object VecsStream {
       .start()
 
   /** The landed k-means state artifact's on-disk shape
-    * ([[graft.extensions.Kmeans.stateFrame]] / lloydFramedState output):
+    * ([[graft.extensions.Kmeans.stateFrame]] / lloydFramed output):
     * declaring it on read-back skips one parquet footer-inference job
     * per micro-batch (the state schema is this module's own contract,
     * not something to re-discover every batch).
@@ -224,8 +224,8 @@ object VecsStream {
                           maxCell: Int =
                             graft.extensions.Kmeans.defaultMaxCell): Unit =
     semdedupIngestStaged(
-      graft.extensions.Kmeans.semStageFramed(batch, idCol, vecCol,
-        routing),
+      graft.extensions.Kmeans.semStage(batch, idCol, vecCol,
+        graft.extensions.Kmeans.Assigner.Routed(routing)),
       batchId, stage0Dir, stageDir, flagsDir, threshold, maxCell)
 
   /** [[semdedupIngest]] with THREE-LEVEL routing (VERDICT r17 #5) —
@@ -265,8 +265,8 @@ object VecsStream {
                            maxCell: Int =
                              graft.extensions.Kmeans.defaultMaxCell): Unit =
     semdedupIngestStaged(
-      graft.extensions.Kmeans.semStageFramed3(batch, idCol, vecCol,
-        routing),
+      graft.extensions.Kmeans.semStage(batch, idCol, vecCol,
+        graft.extensions.Kmeans.Assigner.Routed3(routing)),
       batchId, stage0Dir, stageDir, flagsDir, threshold, maxCell)
 
   /** The shared ingest tail over an already-staged batch frame

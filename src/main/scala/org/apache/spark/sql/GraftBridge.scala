@@ -35,4 +35,12 @@ object GraftBridge {
     val ds = df.asInstanceOf[classic.Dataset[_]]
     ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
   }
+
+  /** Unpersist `df` AND every cached frame whose plan is built on it.
+    * `Dataset.unpersist` drops only the frame itself, so caches a
+    * callee persisted on top of it would outlive it. */
+  def uncacheCascade(df: Dataset[_]): Unit = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    ds.sparkSession.sharedState.cacheManager.uncacheQuery(ds, cascade = true)
+  }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.extensions.{Multimodal, Similarity, TextAnalysis, TextDedup}
+import graft.extensions.Kmeans.Assigner.{Exact, Routed, Routed3}
 
 /** Unit coverage for the training-data extension operators. */
 class ExtensionsSpec extends SparkTestBase {
@@ -195,7 +196,7 @@ class ExtensionsSpec extends SparkTestBase {
       "vec_id", "embedding", k = 2, rounds = 1)
     val ragged = Seq(9L -> Array(1f, 0f, 5f)).toDF("vec_id", "embedding")
     val ex = intercept[Exception] {
-      graft.extensions.Kmeans.assign(ragged, "vec_id", "embedding", m)
+      graft.extensions.Kmeans.assign(ragged, "vec_id", "embedding", Exact(m))
         .collect()
     }
     def messages(t: Throwable): Seq[String] =
@@ -232,7 +233,7 @@ class ExtensionsSpec extends SparkTestBase {
     assert(m.inertiaQ(0) == 4000000L)
     assert(m.inertiaQ(1) < m.inertiaQ(0))
     val assigned = graft.extensions.Kmeans
-      .assign(vecs, "vec_id", "embedding", m)
+      .assign(vecs, "vec_id", "embedding", Exact(m))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(assigned == Map(0L -> 0, 2L -> 0, 3L -> 0,
                            1L -> 1, 4L -> 1, 5L -> 1))
@@ -244,7 +245,7 @@ class ExtensionsSpec extends SparkTestBase {
       "vec_id", "embedding", k = 2, rounds = 1)
     val tie = graft.extensions.Kmeans.assign(
         Seq(9L -> Array(1f, 0f)).toDF("vec_id", "embedding"),
-        "vec_id", "embedding", m2)
+        "vec_id", "embedding", Exact(m2))
       .collect()
     assert(tie.map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .toSeq == Seq((9L, 0, 1000000L)))
@@ -267,8 +268,11 @@ class ExtensionsSpec extends SparkTestBase {
     // s1=(22/3, 0); membership s0={c0,c1}, s1={c2,c3}
     val qs = Seq(100L -> Array(1.5f, 0f), 101L -> Array(4.5f, 0f))
       .toDF("vec_id", "embedding")
-    val routed = graft.extensions.Kmeans.routedAssign(qs, "vec_id",
-        "embedding", m, nSupers = 2)
+    val routing = graft.extensions.Kmeans.framedRoutingFor(
+      graft.extensions.Kmeans.lastCentroidsFrame(spark, m),
+      "cluster", "cv", nSupers = 2)
+    val routed = graft.extensions.Kmeans.assign(qs, "vec_id",
+        "embedding", Routed(routing))
       .collect().map(r => r.getLong(0) ->
         ((r.getInt(1), r.getLong(2), r.getInt(3)))).toMap
     // (1.5, 0) routes to s0 (2.25 < 34.03) and lands on c1, d = 0.25
@@ -278,7 +282,7 @@ class ExtensionsSpec extends SparkTestBase {
     // c2, d = 30.25 — the documented nProbe=1 trade, deterministic
     assert(routed(101L) == ((2, 30250000L, 1)))
     val exact = graft.extensions.Kmeans.assign(qs, "vec_id",
-        "embedding", m)
+        "embedding", Exact(m))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(exact(101L) == 1, "fixture must make routed != exact")
     // nProbe=2 probes BOTH supers and recovers the exact answer the
@@ -286,24 +290,16 @@ class ExtensionsSpec extends SparkTestBase {
     // the argmin lands on the true nearest c1 (d 12.25), reported
     // against its own super 0; (1.5, 0) is unchanged (its true best
     // was already in the routed super)
-    val routing = graft.extensions.Kmeans.routingFor(spark, m, 2)
-    val routed2 = graft.extensions.Kmeans.routedAssign(qs, "vec_id",
-        "embedding", routing, nProbe = 2)
+    val routed2 = graft.extensions.Kmeans.assign(qs, "vec_id",
+        "embedding", Routed(routing, nProbe = 2))
       .collect().map(r => r.getLong(0) ->
         ((r.getInt(1), r.getLong(2), r.getInt(3)))).toMap
     assert(routed2(100L) == ((1, 250000L, 0)))
     assert(routed2(101L) == ((1, 12250000L, 0)))
-    // nProbe=1 through the multi-probe kernel is bit-equal to the
-    // single-probe path (same distances, same tie order)
-    val routed1 = graft.extensions.Kmeans.routedAssign(qs, "vec_id",
-        "embedding", routing, nProbe = 1)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getInt(1), r.getLong(2), r.getInt(3)))).toMap
-    assert(routed1 == routed)
   }
 
   test("framed k-means assignment: member centroids as a FRAME " +
-       "reproduce the literal-table routed decision bit-for-bit " +
+       "reproduce the hand-computed two-level routed decision " +
        "(same supers, same argmin, same dq, same ties)") {
     import spark.implicits._
     val pts = Seq(0L -> Array(0f, 0f), 1L -> Array(1f, 0f),
@@ -314,37 +310,27 @@ class ExtensionsSpec extends SparkTestBase {
     val qs = Seq(100L -> Array(1.5f, 0f), 101L -> Array(4.5f, 0f),
       102L -> Array(10.5f, 0f)) // exact distance tie c2/c3 in super 1
       .toDF("vec_id", "embedding")
-    val literal = graft.extensions.Kmeans.routedAssign(qs, "vec_id",
-        "embedding", m, nSupers = 2)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        r.getInt(3))).toSet
     val framedRouting = graft.extensions.Kmeans.framedRoutingFor(
       graft.extensions.Kmeans.lastCentroidsFrame(spark, m),
       "cluster", "cv", nSupers = 2)
-    val framed = graft.extensions.Kmeans.framedAssign(qs, "vec_id",
-        "embedding", framedRouting)
+    val framed = graft.extensions.Kmeans.assign(qs, "vec_id",
+        "embedding", Routed(framedRouting))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getInt(3))).toSet
-    assert(framed == literal)
-    // the tie case really ties: (10.5, 0) is 0.25 from both c2 and c3
-    // and the frame-side fold keeps the smaller id
-    assert(framed.exists(t => t._1 == 102L && t._2 == 2 &&
-      t._3 == 250000L))
-    // multi-probe parity: the framed nProbe=2 decision — per-slot
-    // member-array folds + cross-slot least — equals the literal
-    // multi-probe kernel path row for row (including the recovered
-    // (4.5, 0) whose true best lives in the second-nearest super)
-    val literal2 = graft.extensions.Kmeans.routedAssign(qs, "vec_id",
-        "embedding", graft.extensions.Kmeans.routingFor(spark, m, 2),
-        nProbe = 2)
+    // the routed-test decisions (supers s0 = {c0, c1}, s1 = {c2, c3}),
+    // plus the tie case: (10.5, 0) is 0.25 from both c2 and c3 and the
+    // frame-side fold keeps the smaller id
+    assert(framed == Set((100L, 1, 250000L, 0), (101L, 2, 30250000L, 1),
+      (102L, 2, 250000L, 1)))
+    // multi-probe: per-slot member-array folds + cross-slot least
+    // recover (4.5, 0), whose true best c1 lives in the second-nearest
+    // super; the other two rows are unchanged
+    val framed2 = graft.extensions.Kmeans.assign(qs, "vec_id",
+        "embedding", Routed(framedRouting, nProbe = 2))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getInt(3))).toSet
-    val framed2 = graft.extensions.Kmeans.framedAssign(qs, "vec_id",
-        "embedding", framedRouting, nProbe = 2)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        r.getInt(3))).toSet
-    assert(framed2 == literal2)
-    assert(framed2.exists(t => t._1 == 101L && t._2 == 1))
+    assert(framed2 == Set((100L, 1, 250000L, 0), (101L, 1, 12250000L, 0),
+      (102L, 2, 250000L, 1)))
   }
 
   test("three-level framed assignment (VERDICT r16 #2): degenerate " +
@@ -365,12 +351,12 @@ class ExtensionsSpec extends SparkTestBase {
     val r11 = graft.extensions.Kmeans.framedRoutingFor3(
       graft.extensions.Kmeans.lastCentroidsFrame(spark, m),
       "cluster", "cv", nSupers = 1, nMids = 1)
-    val deg = graft.extensions.Kmeans.framedAssign3(qs, "vec_id",
-        "embedding", r11)
+    val deg = graft.extensions.Kmeans.assign(qs, "vec_id",
+        "embedding", Routed3(r11))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getInt(3), r.getInt(4))).toSet
     val exact = graft.extensions.Kmeans.assign(qs, "vec_id",
-        "embedding", m)
+        "embedding", Exact(m))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         0, 0)).toSet
     assert(deg == exact)
@@ -385,12 +371,14 @@ class ExtensionsSpec extends SparkTestBase {
     val r22 = graft.extensions.Kmeans.framedRoutingFor3(
       graft.extensions.Kmeans.lastCentroidsFrame(spark, m),
       "cluster", "cv", nSupers = 2, nMids = 2)
-    val a22 = graft.extensions.Kmeans.framedAssign3(qs, "vec_id",
-        "embedding", r22)
+    val a22 = graft.extensions.Kmeans.assign(qs, "vec_id",
+        "embedding", Routed3(r22))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .toSet
-    val twoLevel = graft.extensions.Kmeans.routedAssign(qs, "vec_id",
-        "embedding", m, nSupers = 2)
+    val twoLevel = graft.extensions.Kmeans.assign(qs, "vec_id",
+        "embedding", Routed(graft.extensions.Kmeans.framedRoutingFor(
+          graft.extensions.Kmeans.lastCentroidsFrame(spark, m),
+          "cluster", "cv", nSupers = 2)))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .toSet
     assert(a22 == twoLevel)
@@ -399,14 +387,14 @@ class ExtensionsSpec extends SparkTestBase {
     val maxLeaf = r22.members.groupBy("super", "mid")
       .count().agg(max("count")).collect().head.getLong(0)
     assert(maxLeaf == 1L)
-    // the three-level staged frame carries the exact framedAssign3
+    // the three-level staged frame carries the exact three-level
     // decision (cluster, dq) — one scan feeds pairs AND the keep rule
-    val staged3 = graft.extensions.Kmeans.semStageFramed3(qs, "vec_id",
-        "embedding", r22)
+    val staged3 = graft.extensions.Kmeans.semStage(qs, "vec_id",
+        "embedding", Routed3(r22))
       .collect().map(r => (r.getLong(0), r.getInt(3), r.getLong(4)))
       .toSet
-    val assign3 = graft.extensions.Kmeans.framedAssign3(qs, "vec_id",
-        "embedding", r22)
+    val assign3 = graft.extensions.Kmeans.assign(qs, "vec_id",
+        "embedding", Routed3(r22))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .toSet
     assert(staged3 == assign3)
@@ -427,7 +415,7 @@ class ExtensionsSpec extends SparkTestBase {
       102L -> Array(10.5f, 0f))
       .toDF("vec_id", "embedding")
     val exact = graft.extensions.Kmeans.assign(qs, "vec_id",
-        "embedding", m)
+        "embedding", Exact(m))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .toSet
     val r22 = graft.extensions.Kmeans.framedRoutingFor3(
@@ -437,13 +425,13 @@ class ExtensionsSpec extends SparkTestBase {
     // candidate set is ALL clusters, so the decision must equal the
     // exact argmin (nProbe=1 here loses 101L: its true best lives in
     // the second-nearest super)
-    val p2 = graft.extensions.Kmeans.framedAssign3(qs, "vec_id",
-        "embedding", r22, nProbe = 2)
+    val p2 = graft.extensions.Kmeans.assign(qs, "vec_id",
+        "embedding", Routed3(r22, nProbe = 2))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .toSet
     assert(p2 == exact)
-    val p1 = graft.extensions.Kmeans.framedAssign3(qs, "vec_id",
-        "embedding", r22, nProbe = 1)
+    val p1 = graft.extensions.Kmeans.assign(qs, "vec_id",
+        "embedding", Routed3(r22, nProbe = 1))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .toSet
     // single-probe loses 101L to cluster 2 (its routed super's best),
@@ -452,8 +440,8 @@ class ExtensionsSpec extends SparkTestBase {
     // over-probe BOTH levels past their populated counts: short probe
     // arrays must leave null slots (get()), never throw — and the
     // answer is still the exact argmin
-    val p5 = graft.extensions.Kmeans.framedAssign3(qs, "vec_id",
-        "embedding", r22, nProbe = 5)
+    val p5 = graft.extensions.Kmeans.assign(qs, "vec_id",
+        "embedding", Routed3(r22, nProbe = 5))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .toSet
     assert(p5 == exact)
@@ -462,8 +450,8 @@ class ExtensionsSpec extends SparkTestBase {
     val fr = graft.extensions.Kmeans.framedRoutingFor(
       graft.extensions.Kmeans.lastCentroidsFrame(spark, m),
       "cluster", "cv", nSupers = 2)
-    val f5 = graft.extensions.Kmeans.framedAssign(qs, "vec_id",
-        "embedding", fr, nProbe = 5)
+    val f5 = graft.extensions.Kmeans.assign(qs, "vec_id",
+        "embedding", Routed(fr, nProbe = 5))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .toSet
     assert(f5 == exact)
@@ -479,8 +467,9 @@ class ExtensionsSpec extends SparkTestBase {
     ).toDF("vec_id", "embedding")
     val m = graft.extensions.Kmeans.lloyd(vecs, "vec_id", "embedding",
       k = 2, rounds = 2)
-    val framed = graft.extensions.Kmeans.lloydFramed(vecs, "vec_id",
-        "embedding", k = 2, rounds = 2, nSupers = 1)
+    val framed = graft.extensions.Kmeans.centroidsOf(
+        graft.extensions.Kmeans.lloydFramed(vecs, "vec_id", "embedding",
+          k = 2, rounds = 2, nSupers = 1))
       .collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
     assert(framed == m.last.toMap.map { case (c, v) => c -> v.toSeq })
   }
@@ -502,7 +491,7 @@ class ExtensionsSpec extends SparkTestBase {
       s"expected stop at round 3, got ${m.inertiaQ}")
     assert(m.inertiaQ(1) == m.inertiaQ(2))
     assert(m.centroids.length == 3)
-    // the fixed-rounds overload is the tolQ < 0 case: all 6 rounds run
+    // the default tolQ < 0 never stops early: all 6 rounds run
     val mFull = graft.extensions.Kmeans.lloyd(vecs, "vec_id",
       "embedding", k = 2, rounds = 6)
     assert(mFull.inertiaQ.length == 6)
@@ -573,14 +562,15 @@ class ExtensionsSpec extends SparkTestBase {
     // colinear pairs have cosine 1; (0,1) is orthogonal to both cluster
     // mates -> exactly the two within-cluster duplicate pairs survive
     val pairs = graft.extensions.Kmeans.nearDupPairs(
-        vecs, "vec_id", "embedding", m, threshold = 0.9)
+        vecs, "vec_id", "embedding", Exact(m), threshold = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((0L, 2L), (1L, 4L)))
     // keep rule evidence: centroids after round 1 are (0.5, 1/3) and
     // (-0.75, 0); dq(0) = floor((0.25 + 1/9)·1e6) = 361111 beats
     // dq(2) = 111111 (0 is farther -> kept); cluster 1 is an EXACT
     // distance tie (62500 both) -> the smaller id wins
-    val dq = graft.extensions.Kmeans.assign(vecs, "vec_id", "embedding", m)
+    val dq = graft.extensions.Kmeans.assign(vecs, "vec_id", "embedding",
+        Exact(m))
       .collect().map(r => (r.getLong(0), r.getLong(2))).toMap
     assert(dq(0L) == 361111L && dq(2L) == 111111L)
     assert(dq(1L) == 62500L && dq(4L) == 62500L)
@@ -597,33 +587,27 @@ class ExtensionsSpec extends SparkTestBase {
     val m = graft.extensions.Kmeans.lloyd(vecs, "vec_id", "embedding",
       k = 2, rounds = 1)
     val staged = graft.extensions.Kmeans.semStage(
-        vecs, "vec_id", "embedding", m)
+        vecs, "vec_id", "embedding", Exact(m))
       .collect().map(r => r.getLong(0) -> ((r.getInt(3), r.getLong(4))))
       .toMap
     val exact = graft.extensions.Kmeans.assign(
-        vecs, "vec_id", "embedding", m)
+        vecs, "vec_id", "embedding", Exact(m))
       .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2))))
       .toMap
     assert(staged == exact)
-    // and the routed/framed stagings match their assign twins too
-    val routing = graft.extensions.Kmeans.routingFor(spark, m, 2)
-    val stagedR = graft.extensions.Kmeans.semStageRouted(
-        vecs, "vec_id", "embedding", routing)
-      .collect().map(r => r.getLong(0) -> ((r.getInt(3), r.getLong(4))))
-      .toMap
-    val exactR = graft.extensions.Kmeans.routedAssign(
-        vecs, "vec_id", "embedding", routing)
-      .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2))))
-      .toMap
-    assert(stagedR == exactR)
+    // and the routed staging matches its assign twin too
     val framed = graft.extensions.Kmeans.framedRoutingFor(
       graft.extensions.Kmeans.lastCentroidsFrame(spark, m),
       "cluster", "cv", 2)
-    val stagedF = graft.extensions.Kmeans.semStageFramed(
-        vecs, "vec_id", "embedding", framed)
+    val stagedF = graft.extensions.Kmeans.semStage(
+        vecs, "vec_id", "embedding", Routed(framed))
       .collect().map(r => r.getLong(0) -> ((r.getInt(3), r.getLong(4))))
       .toMap
-    assert(stagedF == exactR)
+    val exactF = graft.extensions.Kmeans.assign(
+        vecs, "vec_id", "embedding", Routed(framed))
+      .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2))))
+      .toMap
+    assert(stagedF == exactF)
   }
 
   test("SemDeDup dense-cell cap (VERDICT r16 #5): a planted mass-" +
@@ -644,7 +628,7 @@ class ExtensionsSpec extends SparkTestBase {
     val m = graft.extensions.Kmeans.lloyd(vecs, "vec_id", "embedding",
       k = 2, rounds = 1)
     val staged = graft.extensions.Kmeans.semStage(
-      vecs, "vec_id", "embedding", m)
+      vecs, "vec_id", "embedding", Exact(m))
     def keepsOf(maxCell: Int): (Long, Set[Long]) = {
       val pairs = graft.extensions.Kmeans.pairsOf(staged, 0.9, maxCell)
       val comps = graft.extensions.Components
@@ -689,7 +673,8 @@ class ExtensionsSpec extends SparkTestBase {
     val v1 = spark.read.parquet(dir)
     val m = graft.extensions.Kmeans.lloyd(v1, "vec_id", "embedding",
       k = 2, rounds = 1)
-    val s1 = graft.extensions.Kmeans.semStage(v1, "vec_id", "embedding", m)
+    val s1 = graft.extensions.Kmeans.semStage(v1, "vec_id", "embedding",
+      Exact(m))
     // memoizes (plan, maxCell=50) -> no mega cell, over corpus 1's entry
     assert(graft.extensions.Kmeans.pairsOf(s1, 0.9, 50).count() == 2)
     // the documented between-corpora reset, then a rewrite at the path
@@ -700,7 +685,7 @@ class ExtensionsSpec extends SparkTestBase {
     // fresh staging under the SAME trained model (the stale-verdict
     // collision scenario: identical plan shape, new data)
     val s2 = graft.extensions.Kmeans.semStage(
-      spark.read.parquet(dir), "vec_id", "embedding", m)
+      spark.read.parquet(dir), "vec_id", "embedding", Exact(m))
     // 200-member cell must come back STAR-capped (199 + 1 healthy
     // pair), not the quadratic 19900+1 the stale verdict would allow
     assert(graft.extensions.Kmeans.pairsOf(s2, 0.9, 50).count() == 200)
@@ -2146,14 +2131,19 @@ class ExtensionsSpec extends SparkTestBase {
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).toSet
-    val ref = rows(TextDedup.incrementalNearDups(
-      fresh, hist, "doc_id", "text", threshold = 0.3))
-    val idx = TextDedup.bandIndexOf(hist, "doc_id", "text")
-    val got = rows(TextDedup.incrementalNearDupsIndexed(
-      fresh, idx, hist, "doc_id", "text", threshold = 0.3))
-    assert(ref.nonEmpty, "split must plant at least one near-dup pair")
-    assert(got == ref,
-      s"indexed path diverged: extra=${got -- ref}, missed=${ref -- got}")
+    // shingleN = 5 as well: the indexed path must verify candidates
+    // with the caller's shingle width, not the default 3
+    for (n <- Seq(3, 5)) {
+      val ref = rows(TextDedup.incrementalNearDups(
+        fresh, hist, "doc_id", "text", threshold = 0.3, shingleN = n))
+      val idx = TextDedup.bandIndexOf(hist, "doc_id", "text", shingleN = n)
+      val got = rows(TextDedup.incrementalNearDupsIndexed(
+        fresh, idx, hist, "doc_id", "text", threshold = 0.3, shingleN = n))
+      assert(ref.nonEmpty,
+        s"shingleN=$n: split must plant at least one near-dup pair")
+      assert(got == ref, s"shingleN=$n: indexed path diverged: " +
+        s"extra=${got -- ref}, missed=${ref -- got}")
+    }
   }
 
   test("unicode normalization: NFC composes, NFKC folds compatibility " +

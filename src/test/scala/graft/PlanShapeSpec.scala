@@ -538,8 +538,9 @@ class PlanShapeSpec extends SparkTestBase {
       val e = graft.tables.Tables.embeddings(spark, dir)
       val m = graft.extensions.Kmeans.lloyd(e, "vec_id", "embedding",
         k = 4, rounds = 1)
-      val plan = unwrapped(graft.extensions.Kmeans.nearDupPairs(
-          e, "vec_id", "embedding", m, threshold = 0.45)
+      val plan = unwrapped(graft.extensions.Kmeans.nearDupPairs(e,
+          "vec_id", "embedding", graft.extensions.Kmeans.Assigner.Exact(m),
+          threshold = 0.45)
         .queryExecution.executedPlan)
       val vecExchanges = plan.collect {
         case x: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec

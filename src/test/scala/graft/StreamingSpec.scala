@@ -470,6 +470,27 @@ class StreamingSpec extends SparkTestBase {
     assert(spark.read.parquet(hist).count() == 4)
   }
 
+  test("near-dup ingest micro-batches release what they persist: the " +
+       "persistent RDD count does not grow with the number of batches") {
+    import spark.implicits._
+    import graft.streaming.DocsStream
+    val tmp = java.nio.file.Files.createTempDirectory("graft-ingest-cache")
+    // every batch near-duplicates the first, so batches >= 1 run the
+    // full staged flag path against a non-empty history
+    def run(b: Long): Unit = DocsStream.flagBatch(spark,
+      Seq(b * 10 -> s"the quick brown fox jumps over the lazy dog $b",
+          (b * 10 + 1) -> s"unrelated text about catalyst number $b")
+        .toDF("doc_id", "text"),
+      b, s"$tmp/hist", s"$tmp/flags", s"$tmp/bands", threshold = 0.3)
+    def persisted = spark.sparkContext.getPersistentRDDs.size
+    run(0L); run(1L)
+    val base = persisted
+    (2L to 5L).foreach(run)
+    assert(persisted == base,
+      s"persistent RDDs grew from $base to $persisted over 4 batches")
+    assert(spark.read.parquet(s"$tmp/flags").count() > 0)
+  }
+
   test("streaming quality-drift monitor: an in-distribution micro-batch " +
        "scores low, a garbage batch scores high, partitions are " +
        "batch-addressed") {
@@ -796,7 +817,8 @@ class StreamingSpec extends SparkTestBase {
     val m0 = Kmeans.lloyd(hist, "vec_id", "embedding", k = 2, rounds = 1)
     val routing = Kmeans.framedRoutingFor(
       Kmeans.lastCentroidsFrame(spark, m0), "cluster", "cv", nSupers = 1)
-    val st0 = Kmeans.semStageFramed(hist, "vec_id", "embedding", routing)
+    val st0 = Kmeans.semStage(hist, "vec_id", "embedding",
+      Kmeans.Assigner.Routed(routing))
     st0.write.mode("overwrite").parquet(stage0)
     st0.unpersist(false)
     // b0: id 10 lands in cell 0, cos vs hist 0 ≈ 0.9988 → flagged;
@@ -863,7 +885,8 @@ class StreamingSpec extends SparkTestBase {
     assert(routing.mids.count() == 2 &&
       routing.members.groupBy("super", "mid").count()
         .agg(functions.max("count")).collect().head.getLong(0) == 1L)
-    val st0 = Kmeans.semStageFramed3(hist, "vec_id", "embedding", routing)
+    val st0 = Kmeans.semStage(hist, "vec_id", "embedding",
+      Kmeans.Assigner.Routed3(routing))
     st0.write.mode("overwrite").parquet(stage0)
     st0.unpersist(false)
     // same batches as the two-level test — the 1×2 hierarchy is the
@@ -912,7 +935,8 @@ class StreamingSpec extends SparkTestBase {
     val routing = Kmeans.framedRoutingFor(
       Seq(0 -> Array(1.0, 0.0), 1 -> Array(0.0, 10.0))
         .toDF("cluster", "cv"), "cluster", "cv", nSupers = 1)
-    val st0 = Kmeans.semStageFramed(hist, "vec_id", "embedding", routing)
+    val st0 = Kmeans.semStage(hist, "vec_id", "embedding",
+      Kmeans.Assigner.Routed(routing))
     st0.write.mode("overwrite").parquet(s"$tmp/stage0")
     st0.unpersist(false)
     // batch: id 200 → mega cell (cos vs (1,0) ≈ 0.9988), id 201 →

@@ -15,4 +15,4 @@ done
 # exhaustion in the truss wedge joins). 24g is still <20% of the host.
 exec java $OPENS -Xmx${SPARK_DRIVER_MEM:-24g} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "target/scala-2.13/classes:target/scala-2.13/test-classes:/opt/spark/jars/*" "$@"
+  -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
