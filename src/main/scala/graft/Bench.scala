@@ -53,22 +53,29 @@ object Bench {
     * shared minimums (mins only ever decrease), or every later full
     * run flags its heavy queries as steal suspects and silently switches
     * to the extra-retry methodology. A file recorded under a different
-    * sfDir or cpus is ignored wholesale (fresh namespace, rewritten on
-    * save); legacy files without the `_sf`/`_cpus` tags were recorded at
+    * sfDir or cpus is ignored wholesale and never rewritten
+    * ([[saveMins]]); legacy files without the `_sf`/`_cpus` tags were recorded at
     * the sf0.1 / 32-core defaults. Belt and braces with [[minsPathFor]],
     * which additionally routes non-default core counts to their own
     * FILE so an 8-core run can't overwrite the committed 32-core table.
     */
   def readMins(path: String, sfDir: String,
                cpus: String = "32"): Map[String, Double] =
-    if (!Files.exists(Paths.get(path))) Map.empty
+    namespaced(path, sfDir, cpus).getOrElse(Map.empty)
+
+  /** [[readMins]], or Left(the file's recorded (sf dir, cpus)) when it
+    * belongs to another namespace. */
+  private def namespaced(path: String, sfDir: String, cpus: String)
+      : Either[(String, String), Map[String, Double]] =
+    if (!Files.exists(Paths.get(path))) Right(Map.empty)
     else {
       val text = Files.readString(Paths.get(path))
       val recordedSf = sfTagRe.findFirstMatchIn(text)
         .map(_.group(1)).getOrElse("/root/testdata/sf0.1")
       val recordedCpus = cpusTagRe.findFirstMatchIn(text)
         .map(_.group(1)).getOrElse("32")
-      if (recordedSf != sfDir || recordedCpus != cpus) Map.empty
+      if (recordedSf != sfDir || recordedCpus != cpus)
+        Left((recordedSf, recordedCpus))
       else {
         val entries = entryRe.findAllMatchIn(text)
           // tolerate a hand-mangled entry ("q":12..3): drop IT, not the
@@ -89,9 +96,38 @@ object Bench {
               "entries — fix its format (Bench writes compact " +
               "{\"_sf\":...,\"name\":0.123,...}) instead of " +
               "re-seeding all floors")
-        entries
+        Right(entries)
       }
     }
+
+  // 3-decimal times: r01-r03 all came back "parsed": null — the bench
+  // reader keeps a bounded stdout tail, and 85 queries at full double
+  // precision overflow it, truncating the JSON line mid-object. ~1ms
+  // resolution is far below scheduling noise, and the line stays < 2.5 KB.
+  private def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** Write `mins` to `path`, tagged with the run's namespace — unless
+    * `path` already holds a table recorded under ANOTHER sf or cpus:
+    * that table is someone else's floors (an explicit
+    * SPARK_GRAFT_BENCH_MINS naming the committed 32-core table from an
+    * 8-core run would otherwise replace every 32-core floor with this
+    * run's samples), so it is left untouched. Returns why nothing was
+    * written, or None after writing.
+    */
+  def saveMins(path: String, sfDir: String, cpus: String,
+               mins: Seq[(String, Double)]): Option[String] = {
+    namespaced(path, sfDir, cpus) match {
+      case Left((fSf, fCpus)) =>
+        Some(s"$path holds floors for sf $fSf at $fCpus cpus, not this " +
+          s"run's sf $sfDir at $cpus cpus — left unchanged")
+      case Right(_) =>
+        Files.writeString(Paths.get(path),
+          (s"\"_sf\":\"$sfDir\"" +: s"\"_cpus\":\"$cpus\"" +:
+            mins.sortBy(_._1).map { case (k, v) => s"\"$k\":${f(v)}" })
+            .mkString("{", ",", "}\n"))
+        None
+    }
+  }
 
   /** Roll one run's samples into the historical minimums. Invariants
     * (BenchSpec): failure penalties NEVER enter the table; a query new
@@ -278,11 +314,6 @@ object Bench {
       if (failed) failures += 1
       name -> (if (failed) failurePenaltySec else best)
     }
-    // 3-decimal times: r01-r03 all came back "parsed": null — the driver
-    // reads a bounded stdout tail, and 85 queries at full double precision
-    // overflow it, truncating the JSON line mid-object. ~1ms resolution is
-    // far below this host's scheduling noise, and the line stays < 2.5 KB.
-    def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + f(v) }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
@@ -330,10 +361,8 @@ object Bench {
     Files.writeString(Paths.get(out), json + "\n" + summary + "\n")
     // roll this run into the historical minimums (clean samples only),
     // tagged with the namespace they were recorded under
-    Files.writeString(Paths.get(minsPath),
-      (s"\"_sf\":\"$sfDir\"" +: s"\"_cpus\":\"$cpus\"" +:
-        mergedMins.toSeq.sortBy(_._1).map { case (k, v) => s"\"$k\":${f(v)}" })
-        .mkString("{", ",", "}\n"))
+    saveMins(minsPath, sfDir, cpus, mergedMins.toSeq)
+      .foreach(why => System.err.println(s"[bench] mins not saved: $why"))
     spark.stop()
   }
 }

@@ -1181,7 +1181,7 @@ object ScaleCurve {
             .agg(sum(col("dq"))).collect().head.getLong(0)
         }
         // the ROUTED prune pipeline's candidate generator
-        // (semdedup_prune_routed): same within-cell search over routed
+        // (semdedup_prune_framed): same within-cell search over routed
         // cell membership — a twin is lost iff routing SPLITS the pair
         // across cells where exact assignment co-located it, so the
         // recall column next to the exact one IS the measured cost of
@@ -2162,7 +2162,7 @@ object ScaleCurve {
        ^routed assign: ${growth(sdPts, "wall assign routed (s)")}.
        ^
        ^The routed-pairs columns run the SAME within-cell search over
-       ^ROUTED cell membership (`semdedup_prune_routed`'s candidate
+       ^ROUTED cell membership (`semdedup_prune_framed`'s candidate
        ^generator): "routed twin recall" next to "twin recall" is the
        ^measured cost of the nProbe=1 trade on the prune pipeline — a
        ^planted twin is lost iff routing splits the pair across cells

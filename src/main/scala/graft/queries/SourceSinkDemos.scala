@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.drugbank.Sinks
 import graft.ops.{AggOps, StringOps}
-import graft.tables.Tables
+import graft.tables.{ScratchDirs, Tables}
 
 /** Driver demos for the source/sink and robustness rows that previously
   * had only unit coverage (SURVEY §2.1 S4/S5/S6, §2.8 U3): each query
@@ -17,11 +17,6 @@ import graft.tables.Tables
 object SourceSinkDemos {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Per-sf scratch dir: deterministic, overwrite-safe. */
-  private def scratch(dir: String, tag: String): String =
-    graft.tables.ScratchDirs.register(
-      s"${sys.props("java.io.tmpdir")}/graft_${tag}_${graft.tables.ArtifactTag(dir)}")
-
   val queries: Map[String, Q] = Map(
     // Hive-style partitioned layout round-trip: write partitioned by
     // lang, read back with a partition filter. At scale this is THE
@@ -29,12 +24,8 @@ object SourceSinkDemos {
     // PlanShapeSpec asserts the re-read plan prunes to the one
     // partition directory (no full-table listing in the plan).
     "partition_prune" -> ((s, dir) => {
-      val path = scratch(dir, "partlang")
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        Tables.documents(s, dir).write.mode("overwrite")
-          .partitionBy("lang").parquet(path)
-      }
-      s.read.parquet(path)
+      Fixtures.frame("partlang", s, dir, "documents")(
+          Tables.documents(s, dir), partitionBy = Seq("lang"))
         .filter(col("lang") === "en")
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"),
@@ -49,7 +40,7 @@ object SourceSinkDemos {
       val stage = Tables.lineitem(s, dir)
         .filter(col("l_quantity") > 40)
         .select("l_orderkey", "l_returnflag", "l_quantity")
-      val path = scratch(dir, "ckpt")
+      val path = ScratchDirs.tmp("ckpt", dir)
       Sinks.writeCheckpoint(stage, path)
       Sinks.readCheckpoint(s, path)
         .groupBy("l_returnflag")
@@ -61,7 +52,7 @@ object SourceSinkDemos {
     // (look_for_identifiers.py:107-112): longs + strings only (doubles
     // would test JSON float formatting, not the sink path).
     "json_roundtrip" -> ((s, dir) => {
-      val path = scratch(dir, "json")
+      val path = ScratchDirs.tmp("json", dir)
       Sinks.writeJson(
         Tables.orders(s, dir).select("o_orderkey", "o_orderpriority"), path)
       s.read.schema(StructType(Seq(
@@ -80,7 +71,7 @@ object SourceSinkDemos {
     // with an explicit schema, aggregate over the RE-READ frame so
     // escaping/fidelity is what the oracle hash checks.
     "xml_roundtrip" -> ((s, dir) => {
-      val path = scratch(dir, "xml")
+      val path = ScratchDirs.tmp("xml", dir)
       Tables.documents(s, dir).select("doc_id", "text")
         .write.mode("overwrite").option("rowTag", "doc")
         .format("xml").save(path)
@@ -98,7 +89,7 @@ object SourceSinkDemos {
     // schema-explicit re-read, fidelity checked by the length aggregate
     // (document text embeds commas, quotes, and newlines).
     "csv_roundtrip" -> ((s, dir) => {
-      val path = scratch(dir, "csv")
+      val path = ScratchDirs.tmp("csv", dir)
       Tables.documents(s, dir).select("doc_id", "text")
         .write.mode("overwrite").option("header", "true").csv(path)
       s.read.schema(StructType(Seq(
@@ -114,7 +105,7 @@ object SourceSinkDemos {
     // ORC sink round-trip: the second columnar format next to parquet —
     // same pushdown/pruning story, exercised through a real write+read.
     "orc_roundtrip" -> ((s, dir) => {
-      val path = scratch(dir, "orc")
+      val path = ScratchDirs.tmp("orc", dir)
       Tables.documents(s, dir)
         .select("doc_id", "lang", "n_chars")
         .write.mode("overwrite").orc(path)
@@ -129,7 +120,7 @@ object SourceSinkDemos {
     // Payload files are derived from document text so the oracle can
     // compute the same byte totals straight from the parquet table.
     "binary_source" -> ((s, dir) => {
-      val path = scratch(dir, "bin")
+      val path = ScratchDirs.tmp("bin", dir)
       val marker = new java.io.File(s"$path/_DONE")
       if (!marker.exists()) {
         new java.io.File(path).mkdirs()
@@ -152,7 +143,7 @@ object SourceSinkDemos {
     // stats arithmetically while Spark must actually parse the codec
     // bytes to reproduce them — a wrong decode breaks the hash.
     "image_decode" -> ((s, dir) => {
-      val path = scratch(dir, "img")
+      val path = ScratchDirs.tmp("img", dir)
       val marker = new java.io.File(s"$path/_DONE")
       if (!marker.exists()) {
         new java.io.File(path).mkdirs()
@@ -197,7 +188,7 @@ object SourceSinkDemos {
     // the box filter — a wrong raster or wrong cell bounds breaks the
     // hash.
     "media_features" -> ((s, dir) => {
-      val path = scratch(dir, "feat")
+      val path = ScratchDirs.tmp("feat", dir)
       val marker = new java.io.File(s"$path/_DONE")
       if (!marker.exists()) {
         new java.io.File(path).mkdirs()
@@ -240,7 +231,7 @@ object SourceSinkDemos {
     // must actually walk the GIF frame directory and decode each frame
     // to reproduce them.
     "gif_frames" -> ((s, dir) => {
-      val path = scratch(dir, "gif")
+      val path = ScratchDirs.tmp("gif", dir)
       val marker = new java.io.File(s"$path/_DONE")
       if (!marker.exists()) {
         new java.io.File(path).mkdirs()
@@ -292,7 +283,7 @@ object SourceSinkDemos {
     // frames/abs-sum/crossings in closed form, Spark must parse the RIFF
     // header and the interleaved 16-bit PCM payload to match the hash.
     "audio_decode" -> ((s, dir) => {
-      val path = scratch(dir, "wav")
+      val path = ScratchDirs.tmp("wav", dir)
       val marker = new java.io.File(s"$path/_DONE")
       if (!marker.exists()) {
         new java.io.File(path).mkdirs()

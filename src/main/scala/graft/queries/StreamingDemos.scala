@@ -2,8 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, md5, pmod, substring}
+import graft.extensions.Kmeans
 import graft.streaming.{DocsStream, EventsStream, SpikeStream, VecsStream}
-import graft.tables.Tables
+import graft.tables.{ScratchDirs, Tables}
 
 /** Streaming-shaped demo: the tumbling-window aggregation registered in
   * its batch form (identical transform feeds the Structured Streaming
@@ -12,45 +13,51 @@ import graft.tables.Tables
 object StreamingDemos {
   type Q = (SparkSession, String) => DataFrame
 
-  // the frozen index's per-cell history error profile is an OFFLINE
-  // artifact (computed once when the index is fitted, like the centroids
-  // themselves) — k rows, memoized per corpus content stamp (not dir
-  // path) so repeated registry executions don't re-scan the history
-  // corpus AND a mid-session testdata regeneration invalidates it
-  private val ivfHistStatsCache =
-    new graft.tables.CorpusMemo[Seq[(Int, Long, Long)]]("embeddings")
-
-  // landed framed-training state parquet per corpus stamp
-  // (stream_kmeans_ingest_framed): the offline artifact the framed
-  // streaming ingest boots from, written once per corpus
-  private val kmeansState0PathCache =
-    new graft.tables.CorpusMemo[String]("embeddings")
-
-  // frozen framed routing over the HISTORY-trained model
-  // (stream_semdedup_ingest) — session-gated, since it holds a frame
-  private val semdedupRoutingCache =
-    new graft.tables.CorpusMemo[graft.extensions.Kmeans.FramedRouting](
-      "embeddings")
-
-  // landed history stage parquet (id, v, nrm, cluster, dq) the
-  // semdedup ingest flags its first batch against — written once
-  private val semdedupStage0PathCache =
-    new graft.tables.CorpusMemo[String]("embeddings")
-
-  // frozen THREE-LEVEL routing + its landed history stage
-  // (stream_semdedup_ingest3) — the r17 #5 bounded-row ingest path
-  private val semdedupRouting3Cache =
-    new graft.tables.CorpusMemo[graft.extensions.Kmeans.FramedRouting3](
-      "embeddings")
-  private val semdedupStage30PathCache =
-    new graft.tables.CorpusMemo[String]("embeddings")
-
-  private def deleteDir(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-      f.delete(); ()
+  /** The two micro-batches every vector-ingest demo replays: the new
+    * quarter of the corpus as `vec_id % 8` = 3, then 7. */
+  private def twoBatches(e: DataFrame)(ingest: (DataFrame, Long) => Unit)
+      : Unit =
+    Seq(3L, 7L).zipWithIndex.foreach { case (m, i) =>
+      ingest(e.filter(pmod(col("vec_id"), lit(8L)) === m), i.toLong)
     }
-    rm(new java.io.File(path))
+
+  /** An online k-means ingest demo: fresh sink dir (correctness relies
+    * on exactly batches {0, 1} existing — batch-addressed overwrite only
+    * protects the batches this run writes), the two-batch replay, the
+    * landed states read back. */
+  private def kmeansIngestDemo(family: String)(
+      ingestOf: (SparkSession, String) => (DataFrame, Long, String) => Unit)
+      : Q = (s, dir) => {
+    val ingest = ingestOf(s, dir)
+    val state = s"${ScratchDirs.tmp(family, dir)}/state"
+    ScratchDirs.deleteRecursively(new java.io.File(state))
+    twoBatches(Tables.embeddings(s, dir))(ingest(_, _, state))
+    s.read.parquet(state)
+      .select(col("batch").cast("long").as("batch"), col("cluster"),
+              col("pos"), col("sq"), col("n"), col("c"))
+      .orderBy("batch", "cluster", "pos")
+  }
+
+  /** A framed SemDeDup ingest demo over the frozen history routing `by`:
+    * the landed history stage (a frame fixture), fresh sink dirs, the
+    * two-batch replay, the accumulated flags read back. */
+  private def semdedupIngestDemo(family: String,
+      by: (SparkSession, String) => Kmeans.Assigner): Q = (s, dir) => {
+    val e = Tables.embeddings(s, dir)
+    val assigner = by(s, dir)
+    val stage0 = Fixtures.landed(s"${family}stage0", dir, "embeddings")(
+      Kmeans.semStage(Fixtures.historySplit(e)._1, "vec_id", "embedding",
+        assigner), release = true)
+    val base = ScratchDirs.tmp(s"${family}ingest", dir)
+    Seq("stage", "flags").foreach(d =>
+      ScratchDirs.deleteRecursively(new java.io.File(s"$base/$d")))
+    twoBatches(e)((batch, i) =>
+      VecsStream.semdedupIngestBatch(batch, i, assigner, stage0,
+        s"$base/stage", s"$base/flags", PipelineDemos.cosineThreshold))
+    s.read.parquet(s"$base/flags")
+      .select(col("batch").cast("long").as("batch"), col("id"),
+              col("dup_of"), col("n_matches"), col("best_cos"))
+      .orderBy("batch", "id")
   }
 
   val queries: Map[String, Q] = Map(
@@ -109,7 +116,7 @@ object StreamingDemos {
       val refScores = docs.filter(hex1 < "8")
         .select(graft.extensions.TextAnalysis.qualityScore(col("text"))
           .as("score"))
-      val base = graft.tables.ScratchDirs.tmp("qdrift", dir)
+      val base = ScratchDirs.tmp("qdrift", dir)
       Seq(hex1 >= "8" && hex1 < "c", hex1 >= "c")
         .zipWithIndex.foreach { case (cond, i) =>
           DocsStream.qualityDriftBatch(docs.filter(cond), i.toLong,
@@ -130,7 +137,7 @@ object StreamingDemos {
       val docs = Tables.documents(s, dir).select("doc_id", "text")
       val bench = docs.filter(col("doc_id") < 5)
       val hex1 = substring(md5(col("doc_id").cast("string")), 1, 1)
-      val base = graft.tables.ScratchDirs.tmp("decontam", dir)
+      val base = ScratchDirs.tmp("decontam", dir)
       Seq(hex1 < "8", hex1 >= "8" && hex1 < "c", hex1 >= "c")
         .zipWithIndex.foreach { case (cond, i) =>
           DocsStream.decontamBatch(docs.filter(cond), i.toLong, bench,
@@ -153,7 +160,7 @@ object StreamingDemos {
     // cumulative cap solves arithmetically.
     "stream_mixture" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "text")
-      val base = graft.tables.ScratchDirs.tmp("mixstream", dir)
+      val base = ScratchDirs.tmp("mixstream", dir)
       (0L to 2L).foreach { b =>
         graft.streaming.DocsStream.mixtureBatch(s,
           docs.filter(pmod(col("doc_id"), lit(3L)) === b), b,
@@ -176,13 +183,14 @@ object StreamingDemos {
     // per-batch drift flag) arithmetically.
     "stream_ivf_ingest" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
-      val hist = e.filter(pmod(col("vec_id"), lit(4L)) < 3L)
-      val index = PipelineDemos.ivfHistIndexCache.getOrElseUpdate(dir,
-        graft.extensions.Ivf.trainDeterministic(hist, "vec_id", "embedding",
-          k = 8))
-      val histRows = ivfHistStatsCache.getOrElseUpdate(dir,
+      val index = Fixtures.ivfHistIndex(s, dir)
+      // the frozen index's per-cell history error profile is an OFFLINE
+      // artifact (computed once when the index is fitted, like the
+      // centroids themselves) — k rows
+      val histRows = Fixtures.value("ivf_hist_stats", dir, "embeddings")(
         graft.extensions.Ivf.cellStats(
-            graft.extensions.Ivf.assign(hist, "vec_id", "embedding", index),
+            graft.extensions.Ivf.assign(Fixtures.historySplit(e)._1,
+              "vec_id", "embedding", index),
             index)
           .collect()
           .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq)
@@ -190,17 +198,16 @@ object StreamingDemos {
         import s.implicits._
         histRows.toDF("cell", "n", "sum_qerr_q")
       }
-      val base = graft.tables.ScratchDirs.tmp("ivfing", dir)
+      val base = ScratchDirs.tmp("ivfing", dir)
       // fresh sink dirs: correctness relies on exactly batches {0, 1}
       // existing, and batch-addressed overwrite only protects batches
       // this run writes — a past run with a different split would leave
       // stale batch=N partitions in the read-back otherwise
-      deleteDir(s"$base/lists"); deleteDir(s"$base/advisory")
-      Seq(3L, 7L).zipWithIndex.foreach { case (m, i) =>
-        VecsStream.ivfIngestBatch(
-          e.filter(pmod(col("vec_id"), lit(8L)) === m), i.toLong,
-          index, histStats, s"$base/lists", s"$base/advisory")
-      }
+      Seq("lists", "advisory").foreach(d =>
+        ScratchDirs.deleteRecursively(new java.io.File(s"$base/$d")))
+      twoBatches(e)((batch, i) =>
+        VecsStream.ivfIngestBatch(batch, i, index, histStats,
+          s"$base/lists", s"$base/advisory"))
       s.read.parquet(s"$base/advisory")
         .select(col("batch").cast("long").as("batch"), col("cell"),
                 col("hist_n"), col("hist_err"),
@@ -216,26 +223,10 @@ object StreamingDemos {
     // (vec_id % 8 = 3 then 7) over the history-trained model; the
     // oracle replays the full chain — history training, batch-0 merge,
     // batch-1 assignment under the UPDATED centroids, batch-1 merge.
-    "stream_kmeans_ingest" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val hist = e.filter(pmod(col("vec_id"), lit(4L)) < 3L)
-      val m = PipelineDemos.kmeansHistCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(hist, "vec_id", "embedding",
-          k = 8, rounds = 3))
-      val base = graft.tables.ScratchDirs.tmp("kmingest", dir)
-      // fresh sink dir: correctness relies on exactly batches {0, 1}
-      // existing (same stance as stream_ivf_ingest)
-      deleteDir(s"$base/state")
-      Seq(3L, 7L).zipWithIndex.foreach { case (mod, i) =>
-        VecsStream.kmeansIngestBatch(
-          e.filter(pmod(col("vec_id"), lit(8L)) === mod), i.toLong,
-          m, s"$base/state")
-      }
-      s.read.parquet(s"$base/state")
-        .select(col("batch").cast("long").as("batch"), col("cluster"),
-                col("pos"), col("sq"), col("n"), col("c"))
-        .orderBy("batch", "cluster", "pos")
-    }),
+    "stream_kmeans_ingest" -> kmeansIngestDemo("kmingest") { (s, dir) =>
+      val m = Fixtures.kmeansModel(s, dir, hist = true)
+      VecsStream.kmeansIngestBatch(_, _, m, _)
+    },
     // FRAME-RESIDENT streaming online k-means: the whole lineage —
     // offline training (lloydFramed), the landed state artifact,
     // and every micro-batch update (incrementalUpdateFramed) — runs
@@ -244,31 +235,16 @@ object StreamingDemos {
     // nSupers=1 keeps batch assignment exact, so the landed states
     // equal stream_kmeans_ingest's bit-for-bit and the demo answers to
     // the same evolving-state oracle.
-    "stream_kmeans_ingest_framed" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val state0 = kmeansState0PathCache.getOrElseUpdate(dir, {
-        val path = graft.tables.ScratchDirs.tmp("kmstate0", dir)
-        val st = graft.extensions.Kmeans.lloydFramed(
-          e.filter(pmod(col("vec_id"), lit(4L)) < 3L),
-          "vec_id", "embedding", k = 8, rounds = 3, nSupers = 1)
-        st.write.mode("overwrite").parquet(path)
-        st.unpersist(false)
-        path
-      })
-      val base = graft.tables.ScratchDirs.tmp("kmingestf", dir)
-      // fresh sink dir: correctness relies on exactly batches {0, 1}
-      // existing (same stance as stream_kmeans_ingest)
-      deleteDir(s"$base/state")
-      Seq(3L, 7L).zipWithIndex.foreach { case (mod, i) =>
-        VecsStream.kmeansIngestBatchFramed(
-          e.filter(pmod(col("vec_id"), lit(8L)) === mod), i.toLong,
-          state0, s"$base/state", "embedding", nSupers = 1)
-      }
-      s.read.parquet(s"$base/state")
-        .select(col("batch").cast("long").as("batch"), col("cluster"),
-                col("pos"), col("sq"), col("n"), col("c"))
-        .orderBy("batch", "cluster", "pos")
-    }),
+    "stream_kmeans_ingest_framed" -> kmeansIngestDemo("kmingestf") {
+      (s, dir) =>
+        val state0 = Fixtures.landed("kmstate0", dir, "embeddings")(
+          Kmeans.lloydFramed(
+            Fixtures.historySplit(Tables.embeddings(s, dir))._1,
+            "vec_id", "embedding", k = 8, rounds = 3, nSupers = 1),
+          release = true)
+        VecsStream.kmeansIngestBatchFramed(_, _, state0, _, "embedding",
+          nSupers = 1)
+    },
     // Streaming framed SemDeDup ingest (VERDICT r16 #6): new vectors
     // route into the FROZEN framed cells of the history-trained model
     // (nSupers=3 — the production routed composition), are near-dup
@@ -278,41 +254,8 @@ object StreamingDemos {
     // stance), and append to the cell-keyed staged lists. The oracle
     // replays the frozen routing, both batch stagings, and both flag
     // joins end-to-end.
-    "stream_semdedup_ingest" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val hist = e.filter(pmod(col("vec_id"), lit(4L)) < 3L)
-      val m = PipelineDemos.kmeansHistCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(hist, "vec_id", "embedding",
-          k = 8, rounds = 3))
-      val routing = semdedupRoutingCache.getOrElseValid(dir,
-          _.members.sparkSession eq s)(
-        graft.extensions.Kmeans.framedRoutingFor(
-          graft.extensions.Kmeans.lastCentroidsFrame(s, m),
-          "cluster", "cv", nSupers = 3))
-      val stage0 = semdedupStage0PathCache.getOrElseUpdate(dir, {
-        val path = graft.tables.ScratchDirs.tmp("sdstage0", dir)
-        val st = graft.extensions.Kmeans.semStage(hist, "vec_id",
-          "embedding", graft.extensions.Kmeans.Assigner.Routed(routing))
-        st.write.mode("overwrite").parquet(path)
-        st.unpersist(false)
-        path
-      })
-      val base = graft.tables.ScratchDirs.tmp("sdingest", dir)
-      // fresh sink dirs: correctness relies on exactly batches {0, 1}
-      // existing (same stance as stream_kmeans_ingest)
-      deleteDir(s"$base/stage")
-      deleteDir(s"$base/flags")
-      Seq(3L, 7L).zipWithIndex.foreach { case (mod, i) =>
-        VecsStream.semdedupIngestBatch(
-          e.filter(pmod(col("vec_id"), lit(8L)) === mod), i.toLong,
-          routing, stage0, s"$base/stage", s"$base/flags",
-          PipelineDemos.cosineThreshold)
-      }
-      s.read.parquet(s"$base/flags")
-        .select(col("batch").cast("long").as("batch"), col("id"),
-                col("dup_of"), col("n_matches"), col("best_cos"))
-        .orderBy("batch", "id")
-    }),
+    "stream_semdedup_ingest" -> semdedupIngestDemo("sd", (s, dir) =>
+      Kmeans.Assigner.Routed(Fixtures.routing(s, dir, hist = true))),
     // THREE-LEVEL streaming SemDeDup ingest (VERDICT r17 #5): the same
     // new-vs-history contract with the frozen structure a 2M-cell
     // regime needs — a FramedRouting3 (2×2 here), so every array row
@@ -321,43 +264,12 @@ object StreamingDemos {
     // idempotent sinks) is the SAME shared code as the two-level demo;
     // the oracle replays the frozen three-level routing, both batch
     // stagings through super → mid → leaf, and both flag joins.
-    "stream_semdedup_ingest3" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val hist = e.filter(pmod(col("vec_id"), lit(4L)) < 3L)
-      val m = PipelineDemos.kmeansHistCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(hist, "vec_id", "embedding",
-          k = 8, rounds = 3))
-      val routing = semdedupRouting3Cache.getOrElseValid(dir,
-          _.members.sparkSession eq s)(
-        graft.extensions.Kmeans.framedRoutingFor3(
-          graft.extensions.Kmeans.lastCentroidsFrame(s, m),
-          "cluster", "cv", nSupers = 2, nMids = 2))
-      val stage0 = semdedupStage30PathCache.getOrElseUpdate(dir, {
-        val path = graft.tables.ScratchDirs.tmp("sd3stage0", dir)
-        val st = graft.extensions.Kmeans.semStage(hist, "vec_id",
-          "embedding", graft.extensions.Kmeans.Assigner.Routed3(routing))
-        st.write.mode("overwrite").parquet(path)
-        st.unpersist(false)
-        path
-      })
-      val base = graft.tables.ScratchDirs.tmp("sd3ingest", dir)
-      deleteDir(s"$base/stage")
-      deleteDir(s"$base/flags")
-      Seq(3L, 7L).zipWithIndex.foreach { case (mod, i) =>
-        VecsStream.semdedupIngestBatch3(
-          e.filter(pmod(col("vec_id"), lit(8L)) === mod), i.toLong,
-          routing, stage0, s"$base/stage", s"$base/flags",
-          PipelineDemos.cosineThreshold)
-      }
-      s.read.parquet(s"$base/flags")
-        .select(col("batch").cast("long").as("batch"), col("id"),
-                col("dup_of"), col("n_matches"), col("best_cos"))
-        .orderBy("batch", "id")
-    }),
+    "stream_semdedup_ingest3" -> semdedupIngestDemo("sd3", (s, dir) =>
+      Kmeans.Assigner.Routed3(Fixtures.routing3(s, dir, hist = true))),
     "stream_ingest_flags" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).select("doc_id", "text")
       val hex1 = substring(md5(col("doc_id").cast("string")), 1, 1)
-      val base = graft.tables.ScratchDirs.tmp("ingest", dir)
+      val base = ScratchDirs.tmp("ingest", dir)
       Seq(hex1 < "8", hex1 >= "8" && hex1 < "c", hex1 >= "c")
         .zipWithIndex.foreach { case (cond, i) =>
           DocsStream.flagBatch(s, docs.filter(cond), i.toLong,
@@ -441,7 +353,7 @@ object StreamingDemos {
     * under `mm`), then per micro-batch the SAME two-hop route + leaf
     * staging for the batch vectors and the within-cell NEW-vs-HISTORY
     * cosine flag join — batch i's history is raf3 plus the staged
-    * batches before i, exactly VecsStream.semdedupIngestBatch3's
+    * batches before i, exactly VecsStream.semdedupIngestBatch's
     * accumulated listing. */
   private def streamSemdedup3Oracle(k: Int, rounds: Int, nSupers: Int,
                                     nMids: Int, mods: Seq[Long],

@@ -115,32 +115,6 @@ object VecsStream {
       .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
   }
 
-  /** FRAME-RESIDENT streaming online k-means — [[kmeansIngest]] with
-    * the k·d driver state removed: per batch the previous state reads
-    * back as a FRAME (never `.collect()`ed — [[kmeansIngestBatch]]
-    * collects k·d rows every batch, the same ceiling
-    * `Kmeans.Assigner.Routed` removes from assignment), the update is
-    * `Kmeans.incrementalUpdateFramed`, and the merged state lands
-    * batch-addressed. `state0Dir` is the landed offline training
-    * artifact (a [[Kmeans.lloydFramed]] or [[Kmeans.stateFrame]]
-    * parquet) — so training → landing → streaming updates never hold
-    * k·d rows on the driver at any step. Exactly-once by the same
-    * argument as [[kmeansIngest]]: state b is a pure function of the
-    * LANDED state b−1 plus batch b, written with batch-addressed
-    * overwrite.
-    */
-  def kmeansIngestFramed(vecs: DataFrame, state0Dir: String,
-                         stateDir: String, checkpointDir: String,
-                         vecCol: String = "embedding",
-                         nSupers: Int = 1): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        kmeansIngestBatchFramed(batch, batchId, state0Dir, stateDir,
-          vecCol, nSupers)
-      }
-      .start()
-
   /** The landed k-means state artifact's on-disk shape
     * ([[graft.extensions.Kmeans.stateFrame]] / lloydFramed output):
     * declaring it on read-back skips one parquet footer-inference job
@@ -159,8 +133,15 @@ object VecsStream {
     org.apache.spark.sql.types.StructField("c",
       org.apache.spark.sql.types.DoubleType)))
 
-  /** One frame-resident online-k-means micro-batch (exposed for
-    * batch-parity tests and the demo registry). */
+  /** One FRAME-RESIDENT online-k-means micro-batch (exposed for
+    * batch-parity tests and the demo registry) — [[kmeansIngestBatch]]
+    * with the k·d driver state removed: the previous state reads back
+    * as a frame (never collected), the update is
+    * `Kmeans.incrementalUpdateFramed`, and the merged state lands
+    * batch-addressed. Batch 0 starts from `state0Dir`, the landed
+    * offline training artifact (a [[Kmeans.lloydFramed]] or
+    * [[Kmeans.stateFrame]] parquet), so training → landing → updates
+    * never hold k·d rows on the driver. */
   def kmeansIngestBatchFramed(batch: DataFrame, batchId: Long,
                               state0Dir: String, stateDir: String,
                               vecCol: String = "embedding",
@@ -176,16 +157,16 @@ object VecsStream {
   }
 
   /** Streaming framed SemDeDup ingest (VERDICT r16 #6) — the streaming
-    * face of the semdedup_prune pipeline, composed from r16's framed
-    * assignment and the incremental-dedup stance: each micro-batch of
-    * new vectors routes into the FROZEN framed cell structure (the
-    * offline-trained [[graft.extensions.Kmeans.FramedRouting]], fixed
-    * at query start like the IVF index and the Bloom filter), is
-    * near-dup-checked against the accumulated HISTORY of its own cell
-    * only (new-vs-history — never hist-vs-hist, and batch-internal
-    * pairs wait for the next batch's history view, exactly
-    * [[DocsStream.nearDupIngest]]'s contract), flagged, and appended
-    * to the cell-keyed staged lists.
+    * face of the semdedup_prune pipeline: each micro-batch of new
+    * vectors stages through `by` — the FROZEN routed cell structure
+    * (an offline-trained [[graft.extensions.Kmeans.FramedRouting]] or,
+    * at the 2M-cell regime, a [[graft.extensions.Kmeans.FramedRouting3]]
+    * whose joined rows stay O(k^(1/3)·d)), fixed at query start like
+    * the IVF index and the Bloom filter — is near-dup-checked against
+    * the accumulated HISTORY of its own cell only (new-vs-history —
+    * never hist-vs-hist, and batch-internal pairs wait for the next
+    * batch's history view, exactly [[DocsStream.nearDupIngest]]'s
+    * contract), flagged, and appended to the cell-keyed staged lists.
     *
     * Exactly-once: flags and staged lists land in batch-id-addressed
     * partitions written with overwrite; history for batch b = the
@@ -195,8 +176,7 @@ object VecsStream {
     * listed history partition is therefore always complete (the
     * [[DocsStream.flagBatch]] write-order argument).
     */
-  def semdedupIngest(vecs: DataFrame,
-                     routing: graft.extensions.Kmeans.FramedRouting,
+  def semdedupIngest(vecs: DataFrame, by: graft.extensions.Kmeans.Assigner,
                      stage0Dir: String, stageDir: String,
                      flagsDir: String, checkpointDir: String,
                      threshold: Double, idCol: String = "vec_id",
@@ -204,19 +184,19 @@ object VecsStream {
     vecs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        semdedupIngestBatch(batch, batchId, routing, stage0Dir,
+        semdedupIngestBatch(batch, batchId, by, stage0Dir,
           stageDir, flagsDir, threshold, idCol, vecCol)
       }
       .start()
 
   /** One framed-SemDeDup ingest micro-batch (exposed for batch-parity
     * tests and the demo registry): stage the batch through the frozen
-    * framed assignment (ONE scan — the staged frame feeds the flag
-    * join and the landed list), flag within-cell near-dups against
-    * history, land flags then the staged list.
+    * assignment (ONE scan — the staged frame feeds the flag join and
+    * the landed list), flag within-cell near-dups against history,
+    * land flags then the staged list.
     */
   def semdedupIngestBatch(batch: DataFrame, batchId: Long,
-                          routing: graft.extensions.Kmeans.FramedRouting,
+                          by: graft.extensions.Kmeans.Assigner,
                           stage0Dir: String, stageDir: String,
                           flagsDir: String, threshold: Double,
                           idCol: String = "vec_id",
@@ -224,54 +204,12 @@ object VecsStream {
                           maxCell: Int =
                             graft.extensions.Kmeans.defaultMaxCell): Unit =
     semdedupIngestStaged(
-      graft.extensions.Kmeans.semStage(batch, idCol, vecCol,
-        graft.extensions.Kmeans.Assigner.Routed(routing)),
+      graft.extensions.Kmeans.semStage(batch, idCol, vecCol, by),
       batchId, stage0Dir, stageDir, flagsDir, threshold, maxCell)
 
-  /** [[semdedupIngest]] with THREE-LEVEL routing (VERDICT r17 #5) —
-    * the streaming face of `semdedup_prune_framed3`: at the 2M-cell
-    * regime the ingest path needs the same bounded-array-row guarantee
-    * as the batch path, so the frozen structure is a
-    * [[graft.extensions.Kmeans.FramedRouting3]] and each micro-batch
-    * stages through the three-level decision (super → mid → leaf,
-    * every joined row O(k^(1/3)·d)). The staged schema, the
-    * new-vs-history flag join, the batch-addressed idempotent sinks
-    * and the write-order argument are IDENTICAL — the whole ingest
-    * tail is shared code ([[semdedupIngestStaged]]), so the two
-    * routing depths cannot drift apart.
-    */
-  def semdedupIngest3(vecs: DataFrame,
-                      routing: graft.extensions.Kmeans.FramedRouting3,
-                      stage0Dir: String, stageDir: String,
-                      flagsDir: String, checkpointDir: String,
-                      threshold: Double, idCol: String = "vec_id",
-                      vecCol: String = "embedding"): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        semdedupIngestBatch3(batch, batchId, routing, stage0Dir,
-          stageDir, flagsDir, threshold, idCol, vecCol)
-      }
-      .start()
-
-  /** One three-level SemDeDup ingest micro-batch (exposed for
-    * batch-parity tests and the demo registry). */
-  def semdedupIngestBatch3(batch: DataFrame, batchId: Long,
-                           routing: graft.extensions.Kmeans.FramedRouting3,
-                           stage0Dir: String, stageDir: String,
-                           flagsDir: String, threshold: Double,
-                           idCol: String = "vec_id",
-                           vecCol: String = "embedding",
-                           maxCell: Int =
-                             graft.extensions.Kmeans.defaultMaxCell): Unit =
-    semdedupIngestStaged(
-      graft.extensions.Kmeans.semStage(batch, idCol, vecCol,
-        graft.extensions.Kmeans.Assigner.Routed3(routing)),
-      batchId, stage0Dir, stageDir, flagsDir, threshold, maxCell)
-
-  /** The shared ingest tail over an already-staged batch frame
-    * ((id, v, nrm, cluster, dq) — any [[graft.extensions.Kmeans
-    * .semStage]]-family depth): list history, flag within-cell
+  /** The ingest tail over an already-staged batch frame
+    * ((id, v, nrm, cluster, dq) — a [[graft.extensions.Kmeans
+    * .semStage]] output at any routing depth): list history, flag within-cell
     * new-vs-history near-dups, land flags THEN the staged list (the
     * write-order argument: a listed history partition is always
     * complete).

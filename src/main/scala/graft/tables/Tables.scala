@@ -282,40 +282,6 @@ object Tables {
   }
 }
 
-/** Per-corpus memo for offline artifacts (frozen indexes, Bloom
-  * filters, history stats): callers key by the sf dir, but entries are
-  * stored under [[Tables.contentStamp]] of the backing table, so a
-  * driver-side regeneration of the parquet mid-session starts a fresh
-  * entry instead of serving an index fitted to data that no longer
-  * exists.
-  */
-final class CorpusMemo[V](tables: String*) {
-  private val entries = scala.collection.concurrent.TrieMap.empty[String, V]
-  private def key(dir: String): String =
-    tables.map(Tables.contentStamp(dir, _)).mkString(";")
-  def getOrElseUpdate(dir: String, v: => V): V =
-    entries.getOrElseUpdate(key(dir), v)
-
-  /** [[getOrElseUpdate]] whose cached value must ALSO pass `valid` to be
-    * reused — for entries naming session-scoped state (catalog table
-    * names, cached plans) that a later SparkSession in the same process
-    * won't have: a stale name would otherwise resolve to nothing (or to
-    * someone else's table) while the content stamp still matches.
-    * Synchronized: the builders behind validity-checked entries do
-    * filesystem + catalog work (DROP TABLE, path delete, saveAsTable),
-    * and two concurrent builders for the same key would destroy each
-    * other's files — the plain getOrElseUpdate path got single-build
-    * atomicity from TrieMap; this path must not lose it.
-    */
-  def getOrElseValid(dir: String, valid: V => Boolean)(v: => V): V =
-    entries.synchronized {
-      val k = key(dir)
-      entries.get(k).filter(valid).getOrElse {
-        val nv = v; entries.put(k, nv); nv
-      }
-    }
-}
-
 /** Collision-free per-(corpus-dir, process) tag for on-disk artifact
   * names and paths: distinct dirs must NEVER share a tag — a lossy
   * sanitization (`replaceAll("[^A-Za-z0-9]", "_")`) maps e.g.

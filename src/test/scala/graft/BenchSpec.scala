@@ -95,6 +95,20 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.minsPathFor("32").endsWith("bench_mins.json"))
   }
 
+  test("saveMins: a table recorded under another sf or cpus is left " +
+       "untouched; the run's own namespace is rewritten") {
+    val committed = s"""{"_sf":"$sf","_cpus":"32","q":0.500}""" + "\n"
+    val path = tmpMins(committed)
+    // an 8-core run (or a run at another sf) naming the 32-core table
+    assert(Bench.saveMins(path, sf, "8", Seq("q" -> 0.2)).nonEmpty)
+    assert(Bench.saveMins(path, sf.replace("sf0.1", "sf0.01"), "32",
+      Seq("q" -> 0.2)).nonEmpty)
+    assert(Files.readString(java.nio.file.Paths.get(path)) == committed)
+    // the matching run rewrites it
+    assert(Bench.saveMins(path, sf, "32", Seq("q" -> 0.4)).isEmpty)
+    assert(Bench.readMins(path, sf, "32") == Map("q" -> 0.4))
+  }
+
   test("readMins: one malformed entry drops that entry, not the table") {
     val path = tmpMins(
       s"""{"_sf":"$sf","good":0.25,"mangled":12..3,"also_good":1.75}""")

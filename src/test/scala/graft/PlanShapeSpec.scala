@@ -342,8 +342,8 @@ class PlanShapeSpec extends SparkTestBase {
       case _: graft.functions.NearestCentroids => true
       case _ => false
     }
-    Seq("semdedup_prune", "semdedup_prune_routed",
-        "semdedup_prune_framed", "semdedup_prune_framed3").foreach { name =>
+    Seq("semdedup_prune", "semdedup_prune_framed",
+        "semdedup_prune_framed3").foreach { name =>
       val df = SparkEntry.queries(name)(spark, dir)
       val p = unwrapped(df.queryExecution.executedPlan)
       // InMemoryTableScan is a LEAF — collect never descends into the
@@ -753,7 +753,7 @@ class PlanShapeSpec extends SparkTestBase {
     val plan = unwrapped(df.queryExecution.executedPlan)
     // localCheckpoint(true) pins the whole intermediate in executor
     // storage memory and surfaces as an RDDScanExec ("Scan ExistingRDD")
-    // — the frameArtifact parquet path must leave only file scans
+    // — the Fixtures.frame parquet path must leave only file scans
     val rddScans = plan.collect {
       case r: org.apache.spark.sql.execution.RDDScanExec => r
     }

@@ -831,7 +831,8 @@ class StreamingSpec extends SparkTestBase {
     //     batch 0's staged rows really are batch 1's history
     val b1 = Seq(VecsStream.Vec(20L, Array(-5f, 6f)))
     val input = MemoryStream[VecsStream.Vec]
-    val q = VecsStream.semdedupIngest(input.toDF(), routing, stage0,
+    val q = VecsStream.semdedupIngest(input.toDF(),
+      Kmeans.Assigner.Routed(routing), stage0,
       stage, flags, ckpt, threshold = 0.9)
     try {
       input.addData(b0: _*); q.processAllAvailable()
@@ -856,7 +857,8 @@ class StreamingSpec extends SparkTestBase {
     // identical — idempotent even with later partitions present
     def df0 = b0.map(v => (v.vec_id, v.embedding))
       .toDF("vec_id", "embedding")
-    VecsStream.semdedupIngestBatch(df0, 0L, routing, stage0, stage,
+    VecsStream.semdedupIngestBatch(df0, 0L,
+      Kmeans.Assigner.Routed(routing), stage0, stage,
       flags, threshold = 0.9)
     assert(flagRows() == got)
   }
@@ -895,7 +897,8 @@ class StreamingSpec extends SparkTestBase {
                  VecsStream.Vec(11L, Array(-5f, 5f)))
     val b1 = Seq(VecsStream.Vec(20L, Array(-5f, 6f)))
     val input = MemoryStream[VecsStream.Vec]
-    val q = VecsStream.semdedupIngest3(input.toDF(), routing, stage0,
+    val q = VecsStream.semdedupIngest(input.toDF(),
+      Kmeans.Assigner.Routed3(routing), stage0,
       stage, flags, ckpt, threshold = 0.9)
     try {
       input.addData(b0: _*); q.processAllAvailable()
@@ -911,9 +914,10 @@ class StreamingSpec extends SparkTestBase {
     // replay of batch 0 after batch 1 landed: history = stage0 alone,
     // identical flags — the shared ingest tail's idempotence argument
     // holds at depth 3 verbatim
-    VecsStream.semdedupIngestBatch3(
+    VecsStream.semdedupIngestBatch(
       b0.map(v => (v.vec_id, v.embedding)).toDF("vec_id", "embedding"),
-      0L, routing, stage0, stage, flags, threshold = 0.9)
+      0L, Kmeans.Assigner.Routed3(routing), stage0, stage, flags,
+      threshold = 0.9)
     assert(flagRows() == got)
   }
 
@@ -944,7 +948,8 @@ class StreamingSpec extends SparkTestBase {
     val batch = Seq(200L -> Array(2f, 0.1f), 201L -> Array(0f, 9f))
       .toDF("vec_id", "embedding")
     def run(sub: String, maxCell: Int) = {
-      VecsStream.semdedupIngestBatch(batch, 0L, routing, s"$tmp/stage0",
+      VecsStream.semdedupIngestBatch(batch, 0L,
+        Kmeans.Assigner.Routed(routing), s"$tmp/stage0",
         s"$tmp/$sub/stage", s"$tmp/$sub/flags", threshold = 0.9,
         maxCell = maxCell)
       spark.read.parquet(s"$tmp/$sub/flags")
