@@ -66,7 +66,6 @@ object PipelineDemo {
     println(s"scan: ${drugs.count()} drug rows")
 
     val stage1 = Stage1.run(drugs, syn, new DictionaryNer(nodes, clusters))
-    stage1.cache()
     println(s"stage1: ${stage1.count()} resolved records")
     Sinks.writeCheckpoint(stage1, s"$outDir/kg2_drug_info.parquet")
     Sinks.writeJson(stage1, s"$outDir/kg2_drug_info.json", singleFile = true)

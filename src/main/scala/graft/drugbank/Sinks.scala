@@ -38,6 +38,14 @@ object Sinks {
     * persist + createDataFrame(df.rdd) round-trip pays, and with the RDD
     * dependency graph truncated too. For a restart-safe boundary across
     * jobs use writeCheckpoint/readCheckpoint.
+    *
+    * Users: the frames `Stage1.run` and `Stage2.run` return (each
+    * stage's output, read by its JSON sink, its parquet checkpoint and
+    * any downstream stage — one execution instead of one per action),
+    * plus the record and merged-hits frames inside Stage1 and the
+    * Stage2 input, which cut references between branches of one plan.
+    * The blocks are freed once the returned frame is no longer
+    * referenced; no caller unpersists.
     */
   def stageBoundary(df: DataFrame): DataFrame =
     df.localCheckpoint(true)

@@ -16,6 +16,12 @@ import graft.synonymizer.Synonymizer
   * The reference's per-drug sequential loop over 5 GPU pipelines becomes
   * two dataset-wide dictionary-match passes; the only shuffles are the
   * mention-dictionary join and the per-drug re-aggregation.
+  *
+  * [[run]] is eager: it runs the stage's jobs on call and returns a
+  * materialized leaf ([[Sinks.stageBoundary]]). The output has three
+  * readers — the JSON sink, the parquet checkpoint and Stage2 — and the
+  * reference likewise builds it once and dumps that one object twice
+  * (perform_NER.py:136-142).
   */
 object Stage1 {
 
@@ -80,7 +86,9 @@ object Stage1 {
     val indication = passMap("ind", "indication_NER_aligned")
     val mechanistic = passMap("mech", "mechanistic_intermediate_nodes")
 
-    recs
+    // Spark plans every action as its own query: left lazy, this tail
+    // (both map joins) would re-run for each of the three readers
+    Sinks.stageBoundary(recs
       .join(indication, col("kg2_id") === indication("doc_key"), "left")
       .drop("doc_key")
       .join(mechanistic, col("kg2_id") === mechanistic("doc_key"), "left")
@@ -88,6 +96,6 @@ object Stage1 {
       .withColumn("indication_NER_aligned",
         coalesce(col("indication_NER_aligned"), emptyMap))
       .withColumn("mechanistic_intermediate_nodes",
-        coalesce(col("mechanistic_intermediate_nodes"), emptyMap))
+        coalesce(col("mechanistic_intermediate_nodes"), emptyMap)))
   }
 }

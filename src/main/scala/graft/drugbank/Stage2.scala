@@ -15,6 +15,11 @@ import graft.stage2.IdentifierAlignment
   * key (skipped harmlessly); its ids are SMPDB:-prefixed so the `":" not
   * in id` gate drops them; nested pathway-enzyme ids are never reached by
   * `field.get('ids')`; `reactions` never exists in the records.
+  *
+  * [[run]] is eager, like `Stage1.run`: it runs the stage's jobs on call
+  * and returns a materialized leaf ([[Sinks.stageBoundary]]), because
+  * the output has two sinks — JSON and the parquet checkpoint
+  * (look_for_identifiers.py:107-112) — and any downstream reader.
   */
 object Stage2 {
 
@@ -85,11 +90,13 @@ object Stage2 {
         struct(col("preferred_curie"), col("info")))))
         .as("mechanistic_intermediate_nodes"))
 
-    stage1.drop("mechanistic_intermediate_nodes")
+    // left lazy, the regex fan-out, both synonymizer probes and the merge
+    // would re-run for each sink
+    Sinks.stageBoundary(stage1.drop("mechanistic_intermediate_nodes")
       .join(merged, col("kg2_id") === merged("key"), "left")
       .drop("key")
       .withColumn("mechanistic_intermediate_nodes",
         coalesce(col("mechanistic_intermediate_nodes"),
-          DrugBank.emptyMatchMap))
+          DrugBank.emptyMatchMap)))
   }
 }

@@ -115,6 +115,19 @@ class DrugBankSpec extends SparkTestBase {
     assert(aspMech("UniProtKB:P45059").getString(0) == "PBP3")
   }
 
+  // every column, maps as sorted entry lists: a sink round-trip need not
+  // keep map key order (and maps cannot be compared by except)
+  private def canon(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.functions.{col, map_entries, sort_array}
+    df.select(df.schema.fields.toIndexedSeq.map { f =>
+      f.dataType match {
+        case _: org.apache.spark.sql.types.MapType =>
+          sort_array(map_entries(col(f.name))).as(f.name)
+        case _ => col(f.name)
+      }
+    }: _*)
+  }
+
   test("stage 2 via parquet checkpoint (S4 restart boundary) matches " +
        "the in-memory composition row for row") {
     val dir = java.nio.file.Files
@@ -122,16 +135,90 @@ class DrugBankSpec extends SparkTestBase {
     val direct = Stage2.run(stage1, new IdentifierAlignment(syn))
     val viaCkpt = Stage2.runCheckpointed(
       stage1, new IdentifierAlignment(syn), dir)
-    import org.apache.spark.sql.functions.{col, map_entries, sort_array}
-    // parquet round-trips map key order; compare sorted entry lists
-    def canon(df: org.apache.spark.sql.DataFrame) = df.select(
-      col("kg2_id"),
-      sort_array(map_entries(col("indication_NER_aligned"))).as("ind"),
-      sort_array(map_entries(col("mechanistic_intermediate_nodes")))
-        .as("mech"))
     assert(canon(viaCkpt).except(canon(direct)).isEmpty &&
            canon(direct).except(canon(viaCkpt)).isEmpty)
     assert(viaCkpt.count() == direct.count())
+  }
+
+  test("each DrugBank stage's output is materialized once") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart, SparkListenerTaskEnd}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ShuffleExchangeExec}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val s1 = Stage1.run(drugs, syn,
+      new DictionaryNer(TestFixtures.nodesDf(spark),
+                        TestFixtures.clustersDf(spark)))
+    val s2 = Stage2.run(s1, new IdentifierAlignment(syn))
+    val outputs = Seq("stage1" -> s1, "stage2" -> s2)
+    // the helper walks into AQE's current plan and its query stages
+    object Plans extends AdaptiveSparkPlanHelper
+    def exchanges(p: SparkPlan) = Plans.collect(p) {
+      case e: ShuffleExchangeExec => e
+      case e: BroadcastExchangeExec => e
+    }
+    for ((name, df) <- outputs)
+      assert(exchanges(df.queryExecution.executedPlan).isEmpty,
+        s"$name output must be a materialized leaf, got:\n" +
+          df.queryExecution.executedPlan)
+
+    // both sinks of both stages scan the stage's blocks: no stage tail
+    // re-runs, so no task writes shuffle bytes. Only the sink jobs (one
+    // job group) are counted.
+    val group = "drugbank-sinks"
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.jobGroup.id") == group)
+          j.stageIds.foreach(stages.add)
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (stages.contains(t.stageId) && t.taskMetrics != null)
+          shuffleBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = ended.add(j.jobId)
+    }
+    val tmp = java.nio.file.Files.createTempDirectory("graft-sinks").toString
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "stage sinks")
+      for ((name, df) <- outputs) {
+        Sinks.writeJson(df, s"$tmp/$name.json")
+        Sinks.writeCheckpoint(df, s"$tmp/$name.parquet")
+      }
+      sc.clearJobGroup()
+      val jobs = sc.statusTracker.getJobIdsForGroup(group)
+      assert(jobs.nonEmpty)
+      // task-end events precede their job's end event on the bus
+      eventually(timeout(30.seconds), interval(50.millis)) {
+        assert(jobs.forall(ended.contains))
+      }
+    } finally sc.removeSparkListener(listener)
+    assert(shuffleBytes.get == 0L,
+      s"the four sinks wrote ${shuffleBytes.get} shuffle bytes")
+  }
+
+  test("each stage's JSON sink and parquet checkpoint hold the same rows") {
+    val s1 = stage1
+    val s2 = Stage2.run(s1, new IdentifierAlignment(syn))
+    val tmp = java.nio.file.Files.createTempDirectory("graft-sinks").toString
+    for ((name, df) <- Seq("s1" -> s1, "s2" -> s2)) {
+      Sinks.writeJson(df, s"$tmp/$name.json")
+      Sinks.writeCheckpoint(df, s"$tmp/$name.parquet")
+      // read with the stage's schema: inference would turn the maps
+      // into structs keyed by curie
+      val json = canon(spark.read.schema(df.schema).json(s"$tmp/$name.json"))
+      val parquet = canon(Sinks.readCheckpoint(spark, s"$tmp/$name.parquet"))
+      assert(json.count() == df.count() && parquet.count() == df.count(),
+        name)
+      assert(json.except(parquet).isEmpty && parquet.except(json).isEmpty,
+        name)
+    }
   }
 
   test("sinks: keyed JSON object shape (S5) + parquet checkpoint (S6)") {

@@ -672,8 +672,10 @@ class PlanShapeSpec extends SparkTestBase {
       case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
         => b
     }).size
-    // 67 as of round 8 (vs 1,126 before the boundary cut); 100 still
-    // fails loudly on any re-introduced subtree duplication
+    // 1 (the demo's final sort) now that Stage1.run and Stage2.run
+    // return materialized leaves — 67 before that, 1,126 before the
+    // boundary cut; 100 still fails loudly on any re-introduced subtree
+    // duplication
     assert(nExchanges < 100,
       s"composite plan must stay bounded, got $nExchanges Exchanges")
   }
